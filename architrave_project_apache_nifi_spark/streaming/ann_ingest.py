@@ -38,7 +38,7 @@ from ..operators.similarity import (
     ivf_save,
 )
 
-from .commitdirs import committed_batch_dirs
+from .commitdirs import committed_batch_dirs, start_foreach_batch
 
 _POINTER = "_CURRENT"
 _FOLDED = "_FOLDED"
@@ -92,6 +92,16 @@ def _folded_deltas(base_dir: str) -> set[str]:
         return {ln.strip() for ln in f if ln.strip()}
 
 
+def _live_deltas(root: str, base_dir: str) -> list[str]:
+    """Committed delta dirs the base at ``base_dir`` has not absorbed."""
+    folded = _folded_deltas(base_dir)
+    return [
+        p
+        for _, p in committed_batch_dirs(os.path.join(root, "deltas"))
+        if os.path.basename(p) not in folded
+    ]
+
+
 def load_index(spark: SparkSession, root: str) -> IvfIndex:
     """Base + all committed deltas as one probe-able index. Each
     source keeps its own ``list_id=`` partitioning, so probe pruning
@@ -101,15 +111,13 @@ def load_index(spark: SparkSession, root: str) -> IvfIndex:
     (crash mid-write; their batch replays)."""
     bdir = _base_dir(root)
     base = ivf_load(spark, bdir)
-    folded = _folded_deltas(bdir)
-    dirs = [
-        p
-        for _, p in committed_batch_dirs(os.path.join(root, "deltas"))
-        if os.path.basename(p) not in folded
-    ]
+    dirs = _live_deltas(root, bdir)
     if not dirs:
         return base
     assigned = base.assigned
+    # one read per delta, not commitdirs.read_committed: each delta is
+    # its own list_id=-partitioned root, and one read over several
+    # roots fails Spark's conflicting-partition-directory check
     for d in dirs:
         assigned = assigned.unionByName(spark.read.parquet(d))
     return IvfIndex(
@@ -160,11 +168,7 @@ def rebuild(
         "__cv", vec_col
     )
     old = _base_dir(root)
-    folding = [
-        os.path.basename(p)
-        for _, p in committed_batch_dirs(os.path.join(root, "deltas"))
-        if os.path.basename(p) not in _folded_deltas(old)
-    ]
+    folding = [os.path.basename(p) for p in _live_deltas(root, old)]
     new_name = (
         "base_1" if os.path.basename(old) == "base"
         else f"base_{int(os.path.basename(old).split('_')[1]) + 1}"
@@ -192,13 +196,9 @@ def run_ann_ingest_stream(
     root: str,
     checkpoint: str,
     vec_col: str = "embedding",
-    trigger_once: bool = True,
 ) -> StreamingQuery:
     """readStream of (id, vector) rows → per-micro-batch delta append
     onto the initialized index (call ``init_index`` first)."""
-    writer = vectors.writeStream.option(
-        "checkpointLocation", checkpoint
-    ).foreachBatch(lambda b, bid: ingest_batch(b, root, bid, vec_col))
-    if trigger_once:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return start_foreach_batch(
+        vectors, lambda b, bid: ingest_batch(b, root, bid, vec_col), checkpoint
+    )

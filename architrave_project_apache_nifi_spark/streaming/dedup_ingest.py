@@ -38,7 +38,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 
 from ..operators.dedup import content_fingerprints, dedup_incremental
-from .commitdirs import committed_batch_dirs
+from .commitdirs import read_committed, start_foreach_batch, write_batch
 
 
 def read_fingerprints(
@@ -51,24 +51,14 @@ def read_fingerprints(
     of its own documents already-seen and commit an empty batch.
     Torn directories (crash mid-write, no ``_SUCCESS``) are skipped
     (commitdirs.py) — their batch replays and overwrites them."""
-    batches = [
-        p
-        for _, p in committed_batch_dirs(
-            os.path.join(root, "fps"), exclude_batch=exclude_batch
-        )
-    ]
-    if not batches:
-        return spark.createDataFrame([], "fp long, first_id long")
-    return spark.read.parquet(*batches)
+    return read_committed(
+        spark, os.path.join(root, "fps"), "fp long, first_id long", exclude_batch
+    )
 
 
 def read_corpus(spark: SparkSession, root: str) -> DataFrame:
     """Every document kept so far (committed batches only)."""
-    corpus_dir = os.path.join(root, "corpus")
-    batches = [p for _, p in committed_batch_dirs(corpus_dir)]
-    if not batches:
-        raise FileNotFoundError(f"no ingested batches under {corpus_dir}")
-    return spark.read.parquet(*batches)
+    return read_committed(spark, os.path.join(root, "corpus"))
 
 
 def ingest_batch(
@@ -93,11 +83,11 @@ def ingest_batch(
     # Survivors only — duplicates must not enter the store, or a
     # replayed twin in a later batch would be "seen" twice (harmless)
     # while inflating the store with never-kept hashes (not harmless).
-    kept.write.mode("overwrite").parquet(
-        os.path.join(root, "corpus", f"batch={batch_id}")
-    )
-    content_fingerprints(kept, id_col, text_col).write.mode("overwrite").parquet(
-        os.path.join(root, "fps", f"batch={batch_id}")
+    write_batch(kept, os.path.join(root, "corpus"), batch_id)
+    write_batch(
+        content_fingerprints(kept, id_col, text_col),
+        os.path.join(root, "fps"),
+        batch_id,
     )
 
 
@@ -107,7 +97,6 @@ def run_dedup_ingest_stream(
     checkpoint: str,
     id_col: str = "doc_id",
     text_col: str = "text",
-    trigger_once: bool = True,
 ) -> StreamingQuery:
     """readStream of documents → per-micro-batch dedup-ingest.
 
@@ -117,9 +106,6 @@ def run_dedup_ingest_stream(
     source offsets; together with idempotent batch writes the pipeline
     is effectively exactly-once end-to-end.
     """
-    writer = docs.writeStream.option("checkpointLocation", checkpoint).foreachBatch(
-        lambda b, bid: ingest_batch(b, root, id_col, text_col, bid)
+    return start_foreach_batch(
+        docs, lambda b, bid: ingest_batch(b, root, id_col, text_col, bid), checkpoint
     )
-    if trigger_once:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()

@@ -27,6 +27,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 
 from ..operators.drift import psi_report
+from .commitdirs import start_foreach_batch, write_batch
 
 
 def drift_gate_batch(
@@ -48,17 +49,13 @@ def drift_gate_batch(
     rows = report.collect()  # one row per monitored column — bounded
     ok = all(r["psi"] <= max_psi for r in rows)
     side = "accepted" if ok else "quarantine"
-    batch.write.mode("overwrite").parquet(
-        os.path.join(root, side, f"batch={batch_id}")
-    )
+    write_batch(batch, os.path.join(root, side), batch_id)
     if not ok:
         # Reports live under a SIBLING root, not inside quarantine/ —
         # the report schema differs from the data schema, so mixing
         # them under one root would break partition-discovery reads
         # of quarantine/.
-        report.coalesce(1).write.mode("overwrite").parquet(
-            os.path.join(root, "reports", f"batch={batch_id}")
-        )
+        write_batch(report.coalesce(1), os.path.join(root, "reports"), batch_id)
     return ok
 
 
@@ -70,16 +67,14 @@ def run_drift_gate_stream(
     numeric_cols: list[str] | None = None,
     categorical_cols: list[str] | None = None,
     max_psi: float = 0.25,
-    trigger_once: bool = True,
 ) -> StreamingQuery:
     """readStream → per-micro-batch PSI gate against a frozen
     reference DataFrame (load it from the frozen sample path once;
     persist it if the stream runs many batches)."""
-    writer = df.writeStream.option("checkpointLocation", checkpoint).foreachBatch(
+    return start_foreach_batch(
+        df,
         lambda b, bid: drift_gate_batch(
             b, reference, root, bid, numeric_cols, categorical_cols, max_psi
-        )
+        ),
+        checkpoint,
     )
-    if trigger_once:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()

@@ -46,16 +46,12 @@ import json
 import os
 import shutil
 
+from pyspark import InheritableThread
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 MANIFEST = "_MANIFEST.json"
 BUCKET = "__bucket"
-
-# Concurrency of the two per-batch commit writes (closed delta +
-# current buckets) — see Scd2Store.commit. 1 = sequential (the pre-r8
-# protocol, kept as a measurement/debug knob).
-_COMMIT_POOL_WORKERS = 2
 
 
 class Scd2Store:
@@ -99,6 +95,15 @@ class Scd2Store:
             self.path, "current", f"v={version}", f"{BUCKET}={bucket}"
         )
 
+    @staticmethod
+    def _bucket_dirs(version_dir: str) -> dict[int, str]:
+        """``bucket → path`` of the bucket dirs under one ``v=`` dir."""
+        return {
+            int(d.split("=", 1)[1]): os.path.join(version_dir, d)
+            for d in os.listdir(version_dir)
+            if d.startswith(f"{BUCKET}=")
+        }
+
     def _closed_dir(self, batch_id: int) -> str:
         return os.path.join(self.path, "closed", f"batch={batch_id}")
 
@@ -139,6 +144,12 @@ class Scd2Store:
             wanted = [(str(b), refs[str(b)]) for b in buckets if str(b) in refs]
         return [self._bucket_dir(v, int(b)) for b, v in wanted]
 
+    def _closed_paths(self, m: dict) -> list[str]:
+        """Every closed-row directory ``m`` references: compacted
+        segments, then per-batch dirs."""
+        paths = [self._segment_dir(s) for s in m.get("closed_segments", [])]
+        return paths + [self._closed_dir(b) for b in m["closed_batches"]]
+
     def has_buckets(self, buckets: list[int]) -> bool:
         """True iff ANY of the given key-hash buckets has committed
         current rows (all-new-key batches may touch only virgin
@@ -161,8 +172,7 @@ class Scd2Store:
         # a store whose live keys were ALL soft-deleted is a legitimate
         # committed state (zero current rows, history intact): return an
         # empty frame with the history schema, which closed rows share
-        closed = [self._segment_dir(s) for s in m.get("closed_segments", [])]
-        closed.extend(self._closed_dir(b) for b in m["closed_batches"])
+        closed = self._closed_paths(m)
         if closed:
             return spark.read.parquet(*closed).limit(0)
         raise ValueError(f"SCD2 store at {self.path} has no committed data")
@@ -174,12 +184,30 @@ class Scd2Store:
         return self._read_all_from(spark, self.manifest())
 
     def _read_all_from(self, spark: SparkSession, m: dict) -> DataFrame:
-        paths = [self._segment_dir(s) for s in m.get("closed_segments", [])]
-        paths.extend(self._closed_dir(b) for b in m["closed_batches"])
-        paths.extend(self._current_paths(m))
+        paths = self._closed_paths(m) + self._current_paths(m)
         return spark.read.parquet(*paths)
 
     # -- snapshots / time travel --------------------------------------------
+
+    def _snapshot_window(self, m: dict) -> tuple[dict[int, str], list[str]]:
+        """``_snapshots/`` split by ``m``'s retention window: ``seq →
+        path`` of the archived manifests in it older than ``m`` (a higher
+        seq is a phantom of a crash before the flip), and the paths of
+        those that fell out of it."""
+        seq = m.get("seq", 0)
+        keep_min = seq - m.get("retain_snapshots", 1) + 1
+        kept, expired = {}, []
+        snaps = self._snapshots_dir()
+        if not os.path.isdir(snaps):
+            return kept, expired
+        for f in os.listdir(snaps):
+            if f.endswith(".json") and f[:-5].isdigit():
+                s, p = int(f[:-5]), os.path.join(snaps, f)
+                if s < keep_min:
+                    expired.append(p)
+                elif s < seq:
+                    kept[s] = p
+        return kept, expired
 
     def snapshots(self) -> list[int]:
         """Readable snapshot sequence numbers, oldest → latest. With
@@ -187,16 +215,7 @@ class Scd2Store:
         readable; K > 1 keeps the last K flips' manifests plus every
         data directory any of them references."""
         latest = self.manifest()
-        seqs = {latest.get("seq", 0)}
-        snaps = self._snapshots_dir()
-        if os.path.isdir(snaps):
-            keep_min = latest.get("seq", 0) - latest.get("retain_snapshots", 1) + 1
-            for f in os.listdir(snaps):
-                if f.endswith(".json") and f[:-5].isdigit():
-                    s = int(f[:-5])
-                    if keep_min <= s <= latest.get("seq", 0):
-                        seqs.add(s)
-        return sorted(seqs)
+        return sorted({latest.get("seq", 0), *self._snapshot_window(latest)[0]})
 
     def read_snapshot(self, spark: SparkSession, seq: int) -> DataFrame:
         """Time travel: the full history exactly as of flip ``seq``
@@ -206,27 +225,21 @@ class Scd2Store:
         latest = self.manifest()
         if seq == latest.get("seq", 0):
             return self._read_all_from(spark, latest)
-        if seq not in self.snapshots():
+        kept = self._snapshot_window(latest)[0]
+        if seq not in kept:
             raise KeyError(
                 f"snapshot {seq} not retained (have {self.snapshots()})"
             )
-        with open(os.path.join(self._snapshots_dir(), f"{seq}.json")) as fh:
+        with open(kept[seq]) as fh:
             return self._read_all_from(spark, json.load(fh))
 
     def _retained_manifests(self, latest: dict) -> list[dict]:
         """The manifests whose references must stay on disk: the latest
         plus every archived snapshot inside the retention window."""
         out = [latest]
-        snaps = self._snapshots_dir()
-        if not os.path.isdir(snaps):
-            return out
-        keep_min = latest.get("seq", 0) - latest.get("retain_snapshots", 1) + 1
-        for f in os.listdir(snaps):
-            if f.endswith(".json") and f[:-5].isdigit():
-                s = int(f[:-5])
-                if keep_min <= s < latest.get("seq", 0):
-                    with open(os.path.join(snaps, f)) as fh:
-                        out.append(json.load(fh))
+        for p in self._snapshot_window(latest)[0].values():
+            with open(p) as fh:
+                out.append(json.load(fh))
         return out
 
     # -- write side ---------------------------------------------------------
@@ -256,22 +269,9 @@ class Scd2Store:
         with open(tmp, "w") as fh:
             json.dump(manifest, fh)
         os.replace(tmp, self._manifest_path())
-        if os.path.isdir(snaps):
-            keep_min = manifest["seq"] - retain + 1
-            for f in os.listdir(snaps):
-                if f.endswith(".json") and f[:-5].isdigit() and int(f[:-5]) < keep_min:
-                    os.remove(os.path.join(snaps, f))
+        for p in self._snapshot_window(manifest)[1]:
+            os.remove(p)
         return manifest
-
-    @staticmethod
-    def _has_data(directory: str) -> bool:
-        try:
-            return any(
-                f.startswith("part-") and not f.endswith(".crc")
-                for f in os.listdir(directory)
-            )
-        except FileNotFoundError:
-            return False
 
     def commit(
         self,
@@ -284,7 +284,10 @@ class Scd2Store:
 
         ``new_current`` holds the post-merge current rows of the TOUCHED
         buckets only (the merge read exactly those buckets); closed rows
-        of the batch land in their own immutable directory.
+        of the batch land in their own immutable directory, which every
+        commit references: Spark writes a schema-only part file for an
+        empty frame, so for a batch that closes no rows that directory
+        holds zero rows until ``compact_closed`` folds it.
         ``touched_buckets`` is the merge's touched set: a touched bucket
         that ends with NO current rows (every key in it soft-deleted)
         writes no directory, and its manifest reference must be DROPPED
@@ -340,42 +343,31 @@ class Scd2Store:
         # happens strictly after BOTH complete. They share the
         # caller-persisted `merged` lineage; cache block locks dedupe
         # the materialization. Interleaved A/B in BASELINE.md r8:
-        # 1.21× rows/s on the bench replay. `_COMMIT_POOL_WORKERS = 1`
-        # restores the sequential protocol (measurement/debug knob).
+        # 1.21× rows/s on the bench replay.
         # InheritableThread, not ThreadPoolExecutor (code-review r8):
         # under pinned-thread mode (PySpark default) plain child
         # threads do NOT inherit SparkContext local properties, so
         # job-group cancellation (stopping the streaming query) and
         # scheduler-pool assignment would miss the two write jobs.
-        if _COMMIT_POOL_WORKERS <= 1:
-            _write_closed()
-            _write_current()
-        else:
-            from pyspark import InheritableThread
+        errs: list[BaseException] = []
 
-            errs: list[BaseException] = []
+        def _run(fn) -> None:
+            try:
+                fn()
+            except BaseException as exc:  # noqa: BLE001 — re-raised below
+                errs.append(exc)
 
-            def _run(fn) -> None:
-                try:
-                    fn()
-                except BaseException as exc:  # noqa: BLE001 — re-raised below
-                    errs.append(exc)
-
-            threads = [
-                InheritableThread(target=_run, args=(fn,))
-                for fn in (_write_closed, _write_current)
-            ]
-            for t in threads:
-                t.start()
-            for t in threads:
-                t.join()
-            if errs:
-                raise errs[0]
-        written = {
-            int(d.split("=", 1)[1])
-            for d in os.listdir(version_dir)
-            if d.startswith(f"{BUCKET}=")
-        }
+        threads = [
+            InheritableThread(target=_run, args=(fn,))
+            for fn in (_write_closed, _write_current)
+        ]
+        for t in threads:
+            t.start()
+        for t in threads:
+            t.join()
+        if errs:
+            raise errs[0]
+        written = set(self._bucket_dirs(version_dir))
         touched = set(touched_buckets) | written if touched_buckets else written
 
         refs = dict(prev_refs)
@@ -384,14 +376,11 @@ class Scd2Store:
                 refs[str(b)] = batch_id
             else:
                 refs.pop(str(b), None)  # bucket emptied by soft deletes
-        closed_batches = [b for b in prev_closed if b != batch_id]
-        if self._has_data(closed_dir):
-            closed_batches.append(batch_id)
         manifest = self._flip(
             {
                 "version": batch_id,
                 "n_buckets": self.n_buckets,
-                "closed_batches": sorted(closed_batches),
+                "closed_batches": sorted({*prev_closed, batch_id}),
                 "closed_segments": (m or {}).get("closed_segments", []),
                 "current_buckets": refs,
             },
@@ -442,15 +431,9 @@ class Scd2Store:
             },
             prev=m,
         )
-
-        still_live = {
-            b
-            for rm in self._retained_manifests(manifest)
-            for b in rm["closed_batches"]
-        }
-        for b in batches:
-            if b not in still_live:  # retained snapshots may still read it
-                shutil.rmtree(self._closed_dir(b), ignore_errors=True)
+        # the folded dirs are now orphans, unless a retained snapshot
+        # still reads them
+        self._sweep_closed_orphans(manifest, keep_seg=seg_version)
         return True
 
     def rebucket(self, spark: SparkSession, new_n_buckets: int) -> None:
@@ -483,11 +466,7 @@ class Scd2Store:
             bucketed.write.mode("overwrite").partitionBy(BUCKET).parquet(
                 version_dir
             )
-            new_refs = {
-                d.split("=", 1)[1]: tag
-                for d in os.listdir(version_dir)
-                if d.startswith(f"{BUCKET}=")
-            }
+            new_refs = {str(b): tag for b in self._bucket_dirs(version_dir)}
         else:
             new_refs = {}
         manifest = self._flip(
@@ -501,9 +480,9 @@ class Scd2Store:
         self._gc_unreferenced(manifest)
 
     def _sweep_closed_orphans(self, m: dict, keep_seg: int) -> None:
-        """Remove closed dirs no manifest reference keeps alive —
-        leftovers of a compaction that crashed between the manifest flip
-        and the folded-dir deletes. Only dirs strictly OLDER than the
+        """Remove closed dirs no retained manifest references — the
+        dirs a compaction just folded, or leftovers of one that crashed
+        between its manifest flip and that delete. Only dirs strictly OLDER than the
         manifest version are swept: an in-flight commit's pre-flip
         ``batch=`` dir always carries a batch id > version, so it is
         never touched even if maintenance runs beside a live stream."""
@@ -549,11 +528,8 @@ class Scd2Store:
                 continue
             version = vd.split("=", 1)[1]
             vpath = os.path.join(cur_root, vd)
-            for bd in os.listdir(vpath):
-                if not bd.startswith(f"{BUCKET}="):
-                    continue
-                bucket = int(bd.split("=", 1)[1])
+            for bucket, bpath in self._bucket_dirs(vpath).items():
                 if (version, bucket) not in live:
-                    shutil.rmtree(os.path.join(vpath, bd), ignore_errors=True)
-            if not any(d.startswith(f"{BUCKET}=") for d in os.listdir(vpath)):
+                    shutil.rmtree(bpath, ignore_errors=True)
+            if not self._bucket_dirs(vpath):
                 shutil.rmtree(vpath, ignore_errors=True)

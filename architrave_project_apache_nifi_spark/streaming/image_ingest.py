@@ -46,29 +46,19 @@ from pyspark.sql.streaming import StreamingQuery
 
 from ..operators.cluster import connected_components
 from ..operators.imagehash import dhash_bands, dhash_neardups, image_dhash
-from .commitdirs import committed_batch_dirs
+from .commitdirs import read_committed, start_foreach_batch, write_batch
 
 
 def _read_hash_store(
     spark: SparkSession, root: str, id_col: str,
     exclude_batch: int | None = None,
 ) -> DataFrame:
-    dirs = [
-        p
-        for _, p in committed_batch_dirs(
-            os.path.join(root, "hashes"), exclude_batch=exclude_batch
-        )
-    ]
-    if not dirs:
-        return spark.createDataFrame([], f"{id_col} long, dhash long")
-    return spark.read.parquet(*dirs)
+    schema = f"{id_col} long, dhash long"
+    return read_committed(spark, os.path.join(root, "hashes"), schema, exclude_batch)
 
 
 def read_image_corpus(spark: SparkSession, root: str) -> DataFrame:
-    dirs = [p for _, p in committed_batch_dirs(os.path.join(root, "corpus"))]
-    if not dirs:
-        raise FileNotFoundError(f"no ingested batches under {root}/corpus")
-    return spark.read.parquet(*dirs)
+    return read_committed(spark, os.path.join(root, "corpus"))
 
 
 def ingest_image_batch(
@@ -137,11 +127,13 @@ def ingest_image_batch(
         )
         kept = alive.join(batch_dups, id_col, "left_anti").persist()
         try:
-            batch.join(kept.select(id_col), id_col, "left_semi").write.mode(
-                "overwrite"
-            ).parquet(os.path.join(root, "corpus", f"batch={batch_id}"))
-            kept.select(id_col, "dhash").write.mode("overwrite").parquet(
-                os.path.join(root, "hashes", f"batch={batch_id}")
+            write_batch(
+                batch.join(kept.select(id_col), id_col, "left_semi"),
+                os.path.join(root, "corpus"),
+                batch_id,
+            )
+            write_batch(
+                kept.select(id_col, "dhash"), os.path.join(root, "hashes"), batch_id
             )
         finally:
             kept.unpersist()
@@ -157,17 +149,13 @@ def run_image_ingest_stream(
     media_col: str = "media",
     max_distance: int = 3,
     n_bands: int = 4,
-    trigger_once: bool = True,
 ) -> StreamingQuery:
     """readStream of image rows → per-micro-batch near-dup ingest."""
-    writer = images.writeStream.option(
-        "checkpointLocation", checkpoint
-    ).foreachBatch(
+    return start_foreach_batch(
+        images,
         lambda b, bid: ingest_image_batch(
             b, root, id_col, bid, media_col=media_col,
             max_distance=max_distance, n_bands=n_bands,
-        )
+        ),
+        checkpoint,
     )
-    if trigger_once:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()

@@ -37,6 +37,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 
 from ..functions.jolt import shift_pivot
+from .commitdirs import start_foreach_batch
 from .scd2_stream import _merge_batch
 
 
@@ -93,7 +94,6 @@ def run_multi_table_scd2_stream(
     specs: Mapping[str, TableSpec],
     checkpoint_path: str,
     ts_col: str = "change_ts",
-    await_termination_s: float | None = None,
     processing_time: str | None = None,
 ) -> StreamingQuery:
     """One streaming query, N per-table SCD2 stores under
@@ -101,19 +101,9 @@ def run_multi_table_scd2_stream(
     position for the whole database — exactly the binlog semantics);
     per-table replay idempotence comes from each store's own committed
     batch id."""
-    os.makedirs(checkpoint_path, exist_ok=True)
-
-    def sink(batch: DataFrame, batch_id: int) -> None:
-        demux_merge_batch(spark, batch, root, specs, batch_id, ts_col)
-
-    writer = stream.writeStream.foreachBatch(sink).option(
-        "checkpointLocation", checkpoint_path
+    return start_foreach_batch(
+        stream,
+        lambda b, bid: demux_merge_batch(spark, b, root, specs, bid, ts_col),
+        checkpoint_path,
+        processing_time,
     )
-    if processing_time is None:
-        writer = writer.trigger(availableNow=True)
-    else:
-        writer = writer.trigger(processingTime=processing_time)
-    query = writer.start()
-    if await_termination_s is not None:
-        query.awaitTermination(await_termination_s)
-    return query

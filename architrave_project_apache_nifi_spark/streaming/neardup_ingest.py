@@ -59,29 +59,18 @@ from pyspark.sql.streaming import StreamingQuery
 
 from ..operators.cluster import connected_components
 from ..operators.dedup import minhash_index, signature_jaccard
-from .commitdirs import committed_batch_dirs
+from .commitdirs import read_committed, start_foreach_batch, write_batch
 
 
 def _read_store(
     spark: SparkSession, root: str, sub: str, schema: str,
     exclude_batch: int | None = None,
 ) -> DataFrame:
-    dirs = [
-        p
-        for _, p in committed_batch_dirs(
-            os.path.join(root, sub), exclude_batch=exclude_batch
-        )
-    ]
-    if not dirs:
-        return spark.createDataFrame([], schema)
-    return spark.read.parquet(*dirs)
+    return read_committed(spark, os.path.join(root, sub), schema, exclude_batch)
 
 
 def read_corpus(spark: SparkSession, root: str) -> DataFrame:
-    dirs = [p for _, p in committed_batch_dirs(os.path.join(root, "corpus"))]
-    if not dirs:
-        raise FileNotFoundError(f"no ingested batches under {root}/corpus")
-    return spark.read.parquet(*dirs)
+    return read_committed(spark, os.path.join(root, "corpus"))
 
 
 def ingest_batch(
@@ -206,17 +195,19 @@ def ingest_batch(
             kept_docs = batch.join(
                 kept_idx.select(id_col), id_col, "left_semi"
             )
-            kept_docs.write.mode("overwrite").parquet(
-                os.path.join(root, "corpus", f"batch={batch_id}")
+            write_batch(kept_docs, os.path.join(root, "corpus"), batch_id)
+            write_batch(
+                kept_idx.select(
+                    F.col(id_col), F.posexplode("bands").alias("band", "band_hash")
+                ),
+                os.path.join(root, "bands"),
+                batch_id,
             )
-            kept_idx.select(
-                F.col(id_col), F.posexplode("bands").alias("band", "band_hash")
-            ).write.mode("overwrite").parquet(
-                os.path.join(root, "bands", f"batch={batch_id}")
+            write_batch(
+                kept_idx.select(id_col, "signature"),
+                os.path.join(root, "sigs"),
+                batch_id,
             )
-            kept_idx.select(id_col, "signature").write.mode(
-                "overwrite"
-            ).parquet(os.path.join(root, "sigs", f"batch={batch_id}"))
         finally:
             kept_idx.unpersist()
     finally:
@@ -230,16 +221,12 @@ def run_neardup_ingest_stream(
     id_col: str = "doc_id",
     text_col: str = "text",
     threshold: float = 0.8,
-    trigger_once: bool = True,
 ) -> StreamingQuery:
     """readStream of documents → per-micro-batch near-dup ingest."""
-    writer = docs.writeStream.option(
-        "checkpointLocation", checkpoint
-    ).foreachBatch(
+    return start_foreach_batch(
+        docs,
         lambda b, bid: ingest_batch(
             b, root, id_col, text_col, bid, threshold=threshold
-        )
+        ),
+        checkpoint,
     )
-    if trigger_once:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()

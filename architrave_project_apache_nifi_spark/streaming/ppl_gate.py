@@ -39,6 +39,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 
 from ..operators.lm import PPL_BUCKETS, lm_counts, trigram_nll_with
+from .commitdirs import start_foreach_batch, write_batch
 
 
 class PplGateModel(NamedTuple):
@@ -119,12 +120,9 @@ def gate_batch(
     """Route one micro-batch: head+middle → accepted, tail → diverted.
     Batch-addressed overwrites — replay converges."""
     scored = score_batch(batch, model, text_col, id_col, lang_col)
-    scored.filter(F.col("ppl_bucket") != PPL_BUCKETS[-1]).write.mode(
-        "overwrite"
-    ).parquet(os.path.join(root, "accepted", f"batch={batch_id}"))
-    scored.filter(F.col("ppl_bucket") == PPL_BUCKETS[-1]).write.mode(
-        "overwrite"
-    ).parquet(os.path.join(root, "diverted", f"batch={batch_id}"))
+    tail = F.col("ppl_bucket") == PPL_BUCKETS[-1]
+    write_batch(scored.filter(~tail), os.path.join(root, "accepted"), batch_id)
+    write_batch(scored.filter(tail), os.path.join(root, "diverted"), batch_id)
 
 
 def run_ppl_gate_stream(
@@ -135,18 +133,14 @@ def run_ppl_gate_stream(
     text_col: str = "text",
     id_col: str = "doc_id",
     lang_col: str = "lang",
-    trigger_once: bool = True,
 ) -> StreamingQuery:
     """readStream → per-micro-batch perplexity routing against the
     frozen artifact."""
-    writer = df.writeStream.option("checkpointLocation", checkpoint).foreachBatch(
-        lambda b, bid: gate_batch(
-            b, root, model, text_col, id_col, lang_col, bid
-        )
+    return start_foreach_batch(
+        df,
+        lambda b, bid: gate_batch(b, root, model, text_col, id_col, lang_col, bid),
+        checkpoint,
     )
-    if trigger_once:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
 
 
 def ppl_gate_save(model: PplGateModel, path: str) -> None:

@@ -35,6 +35,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 
 from ..operators.quality import check_constraints
+from .commitdirs import start_foreach_batch, write_batch
 
 
 def gate_batch(
@@ -48,9 +49,7 @@ def gate_batch(
     verdict = report.collect()  # one row per rule — bounded, documented
     ok = all(r["passed"] == 1 for r in verdict)
     side = "accepted" if ok else "quarantine"
-    batch.write.mode("overwrite").parquet(
-        os.path.join(root, side, f"batch={batch_id}")
-    )
+    write_batch(batch, os.path.join(root, side), batch_id)
     if not ok:
         report.coalesce(1).write.mode("overwrite").parquet(
             os.path.join(root, "quarantine", f"batch={batch_id}_report")
@@ -63,12 +62,8 @@ def run_quality_gate_stream(
     root: str,
     checkpoint: str,
     rules: dict[str, Column],
-    trigger_once: bool = True,
 ) -> StreamingQuery:
     """readStream → per-micro-batch constraint gate."""
-    writer = df.writeStream.option("checkpointLocation", checkpoint).foreachBatch(
-        lambda b, bid: gate_batch(b, root, rules, bid)
+    return start_foreach_batch(
+        df, lambda b, bid: gate_batch(b, root, rules, bid), checkpoint
     )
-    if trigger_once:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()

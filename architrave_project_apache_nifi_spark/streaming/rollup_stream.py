@@ -32,7 +32,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.streaming import StreamingQuery
 
 from ..operators.incremental_agg import finalize, incremental_refresh
-from .commitdirs import committed_batch_dirs
+from .commitdirs import committed_batch_dirs, start_foreach_batch, write_batch
 
 
 def _state_dirs(root: str) -> list[tuple[int, str]]:
@@ -72,9 +72,7 @@ def rollup_batch(
     spark = batch.sparkSession
     prev = read_state(spark, root, before_batch=batch_id)
     new_state = incremental_refresh(prev, batch, keys, measures, distinct_cols)
-    new_state.write.mode("overwrite").parquet(
-        os.path.join(root, "state", f"batch={batch_id}")
-    )
+    write_batch(new_state, os.path.join(root, "state"), batch_id)
 
 
 def read_rollup(
@@ -113,17 +111,13 @@ def run_rollup_stream(
     checkpoint: str,
     keys: list[str],
     measures: list[str],
-    trigger_once: bool = True,
     distinct_cols: list[str] = [],
 ) -> StreamingQuery:
     """readStream of events → per-micro-batch state fold. Checkpoint
     carries source offsets; idempotent snapshot writes make the
     pipeline effectively exactly-once."""
-    writer = events.writeStream.option(
-        "checkpointLocation", checkpoint
-    ).foreachBatch(
-        lambda b, bid: rollup_batch(b, root, keys, measures, bid, distinct_cols)
+    return start_foreach_batch(
+        events,
+        lambda b, bid: rollup_batch(b, root, keys, measures, bid, distinct_cols),
+        checkpoint,
     )
-    if trigger_once:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()

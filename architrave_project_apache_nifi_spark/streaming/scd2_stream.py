@@ -31,14 +31,13 @@ we order by ``cdc_sequence_id`` within each batch instead.
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 
 from ..operators.scd2 import scd2_apply, scd2_build, scd2_split_late
 from ..sources import cdc
+from .commitdirs import read_committed, start_foreach_batch, write_batch
 from .history_store import Scd2Store
 
 #: Late-event policies for the streaming merge. "compat" trusts
@@ -53,6 +52,26 @@ from .history_store import Scd2Store
 LATE_POLICIES = ("compat", "quarantine")
 
 
+def _changes(
+    batch: DataFrame, ts_col: str, handle_deletes: bool, flatten
+) -> DataFrame:
+    """One envelope micro-batch as flat change rows — the input of both
+    SCD2 sinks: inserts and updates (plus deletes, flagged ``__tomb``,
+    when ``handle_deletes``) pivoted by ``flatten(batch, keep)``,
+    stamped ``ts_col`` from the envelope's epoch-millis ``timestamp``,
+    keeping ``cdc_sequence_id`` as the within-batch order."""
+    wanted = ("insert", "update", "delete") if handle_deletes else (
+        "insert", "update"
+    )
+    changes = flatten(
+        batch.filter(F.col("type").isin(*wanted)),
+        keep=("type", "timestamp", "cdc_sequence_id"),
+    ).withColumn(ts_col, F.timestamp_millis(F.col("timestamp")))
+    if handle_deletes:
+        changes = changes.withColumn("__tomb", F.col("type") == "delete")
+    return changes.drop("type", "timestamp")
+
+
 def _merge_batch(
     spark: SparkSession,
     batch: DataFrame,
@@ -64,7 +83,7 @@ def _merge_batch(
     handle_deletes: bool = False,
     compact_every: int | None = None,
     retain_snapshots: int = 1,
-    flatten_fn=None,
+    flatten_fn=cdc.flatten_events,
     late_policy: str = "compat",
 ) -> None:
     """Merge one micro-batch into the incremental history store.
@@ -105,22 +124,8 @@ def _merge_batch(
     )
     if store.exists() and store.manifest()["version"] >= batch_id:
         return  # replayed, already committed — idempotent no-op
-    wanted = ("insert", "update", "delete") if handle_deletes else (
-        "insert", "update"
-    )
-    flatten = flatten_fn if flatten_fn is not None else cdc.flatten_events
-    changes = (
-        flatten(
-            batch.filter(F.col("type").isin(*wanted)),
-            keep=("type", "timestamp", "cdc_sequence_id"),
-        )
-        .withColumn(ts_col, F.timestamp_millis(F.col("timestamp")))
-        .withColumn("__tomb", F.col("type") == "delete")
-        .drop("type", "timestamp")
-    )
+    changes = _changes(batch, ts_col, handle_deletes, flatten_fn)
     tombstone_col = "__tomb" if handle_deletes else None
-    if not handle_deletes:
-        changes = changes.drop("__tomb")
     # persist: the batch lineage otherwise re-runs source-read + flatten
     # four times (empty probe, touched-bucket collect, the merge's
     # auto-broadcast key count, and the commit materialization) — on a
@@ -162,11 +167,8 @@ def _merge_batch(
                 # pre-merge state, overwriting batch=<id> idempotently.
                 changes, late = scd2_split_late(current, changes, key, ts_col)
                 if late.head(1):
-                    late.write.mode("overwrite").parquet(
-                        os.path.join(
-                            history_path.rstrip("/") + "_quarantine",
-                            f"batch={batch_id}",
-                        )
+                    write_batch(
+                        late, history_path.rstrip("/") + "_quarantine", batch_id
                     )
                 if not changes.head(1):
                     return  # everything was late; nothing to merge
@@ -189,22 +191,31 @@ def _merge_batch(
                 changes, key, ts_col, order_cols=("cdc_sequence_id",),
                 tombstone_col=tombstone_col, skew_protection=False,
             )
-        merged = merged.persist()  # one evaluation feeds both commit writes
-        try:
-            store.commit(
-                new_current=merged.filter(F.col("is_current") == "Y"),
-                closed_delta=merged.filter(F.col("is_current") == "N"),
-                batch_id=batch_id,
-                touched_buckets=touched or None,
-            )
-        finally:
-            merged.unpersist()
+        _commit_merged(store, merged, batch_id, touched or None)
     finally:
         _pinned.unpersist()
     if compact_every:
         # post-commit maintenance in the same single-writer thread:
         # folds accumulated per-batch closed dirs once enough pile up
         store.compact_closed(spark, min_batches=compact_every)
+
+
+def _commit_merged(
+    store: Scd2Store, merged: DataFrame, batch_id: int,
+    touched: list[int] | None = None,
+) -> None:
+    """Commit a merged history frame: its current rows replace the
+    touched buckets, its closed rows append (``Scd2Store.commit``)."""
+    merged = merged.persist()  # one evaluation feeds both commit writes
+    try:
+        store.commit(
+            new_current=merged.filter(F.col("is_current") == "Y"),
+            closed_delta=merged.filter(F.col("is_current") == "N"),
+            batch_id=batch_id,
+            touched_buckets=touched,
+        )
+    finally:
+        merged.unpersist()
 
 
 def splice_quarantine(
@@ -232,20 +243,8 @@ def splice_quarantine(
     caller bug, not a silent no-op)."""
     from ..operators.scd2 import scd2_apply_late
     from ..sources.sinks import read_history
-    from .commitdirs import committed_batch_dirs
 
-    qdirs = [
-        p
-        for _, p in committed_batch_dirs(
-            history_path.rstrip("/") + "_quarantine"
-        )
-    ]
-    if not qdirs:
-        raise FileNotFoundError(
-            f"no committed quarantine batches under "
-            f"{history_path.rstrip('/')}_quarantine"
-        )
-    late = spark.read.parquet(*qdirs)
+    late = read_committed(spark, history_path.rstrip("/") + "_quarantine")
     n_late = late.count()
     history = read_history(spark, history_path)
     merged = scd2_apply_late(
@@ -254,15 +253,7 @@ def splice_quarantine(
     out_store = Scd2Store(out_path, key_col=key, n_buckets=n_buckets)
     if out_store.exists():
         raise FileExistsError(f"splice target already exists: {out_path}")
-    merged = merged.persist()
-    try:
-        out_store.commit(
-            new_current=merged.filter(F.col("is_current") == "Y"),
-            closed_delta=merged.filter(F.col("is_current") == "N"),
-            batch_id=0,
-        )
-    finally:
-        merged.unpersist()
+    _commit_merged(out_store, merged, 0)
     return n_late
 
 
@@ -273,7 +264,6 @@ def run_scd2_stream_from(
     checkpoint_path: str,
     key: str = "ProductID",
     ts_col: str = "change_ts",
-    await_termination_s: float | None = None,
     processing_time: str | None = None,
     n_buckets: int = 16,
     handle_deletes: bool = False,
@@ -285,9 +275,9 @@ def run_scd2_stream_from(
     socket, the custom ``cdc_replay`` Python DataSource) into the SCD2
     merge sink — the source is pluggable, the merge is one code path.
 
-    ``processing_time``: use a continuous micro-batch trigger instead of
-    availableNow (Python DataSources don't implement availableNow; the
-    caller stops the query — the reference's always-on 200 ms poll).
+    ``processing_time``: a continuous micro-batch trigger instead of
+    availableNow (``commitdirs.start_foreach_batch``) — the
+    reference's always-on 200 ms poll.
     ``n_buckets``: current-snapshot bucket count, fixed at store
     creation (size so one bucket's current rows fit one task).
     ``handle_deletes=False`` matches the reference (delete events are
@@ -304,7 +294,6 @@ def run_scd2_stream_from(
     the key's current ``valid_from`` (binlog replay / source backfill)
     to ``<history_path>_quarantine/batch=<id>`` instead of corrupting
     the chain — see ``LATE_POLICIES`` for why splice is batch-only."""
-    os.makedirs(checkpoint_path, exist_ok=True)
 
     def sink(batch: DataFrame, batch_id: int) -> None:
         _merge_batch(
@@ -313,17 +302,7 @@ def run_scd2_stream_from(
             late_policy=late_policy,
         )
 
-    writer = stream.writeStream.foreachBatch(sink).option(
-        "checkpointLocation", checkpoint_path
-    )
-    if processing_time is None:
-        writer = writer.trigger(availableNow=True)
-    else:
-        writer = writer.trigger(processingTime=processing_time)
-    query = writer.start()
-    if await_termination_s is not None:
-        query.awaitTermination(await_termination_s)
-    return query
+    return start_foreach_batch(stream, sink, checkpoint_path, processing_time)
 
 
 def run_scd2_stream_to_jdbc(
@@ -336,7 +315,6 @@ def run_scd2_stream_to_jdbc(
     ts_col: str = "change_ts",
     properties: dict[str, str] | None = None,
     processing_time: str | None = None,
-    await_termination_s: float | None = None,
     handle_deletes: bool = False,
 ) -> StreamingQuery:
     """The reference's ACTUAL topology, made correct: stream the CDC
@@ -359,26 +337,14 @@ def run_scd2_stream_to_jdbc(
     history — but both share the same flatten/route/merge semantics."""
     from ..sources.sinks import jdbc_scd2_commit
 
-    os.makedirs(checkpoint_path, exist_ok=True)
     props = properties or {}
-    wanted = ("insert", "update", "delete") if handle_deletes else (
-        "insert", "update"
-    )
+    tombstone_col = "__tomb" if handle_deletes else None
 
     def sink(batch: DataFrame, batch_id: int) -> None:
-        changes = (
-            cdc.flatten_events(
-                batch.filter(F.col("type").isin(*wanted)),
-                keep=("type", "timestamp", "cdc_sequence_id"),
-            )
-            .withColumn(ts_col, F.timestamp_millis(F.col("timestamp")))
-            .withColumn("__tomb", F.col("type") == "delete")
-            .drop("type", "timestamp")
-        )
-        tombstone_col = "__tomb" if handle_deletes else None
-        if not handle_deletes:
-            changes = changes.drop("__tomb")
-        changes = changes.persist()  # staged twice (expire summary + versions)
+        # persisted: staged twice (expire summary + versions)
+        changes = _changes(
+            batch, ts_col, handle_deletes, cdc.flatten_events
+        ).persist()
         try:
             if not changes.head(1):
                 return
@@ -391,17 +357,7 @@ def run_scd2_stream_to_jdbc(
         finally:
             changes.unpersist()
 
-    writer = stream.writeStream.foreachBatch(sink).option(
-        "checkpointLocation", checkpoint_path
-    )
-    if processing_time is None:
-        writer = writer.trigger(availableNow=True)
-    else:
-        writer = writer.trigger(processingTime=processing_time)
-    query = writer.start()
-    if await_termination_s is not None:
-        query.awaitTermination(await_termination_s)
-    return query
+    return start_foreach_batch(stream, sink, checkpoint_path, processing_time)
 
 
 def run_scd2_stream(
@@ -412,7 +368,6 @@ def run_scd2_stream(
     key: str = "ProductID",
     ts_col: str = "change_ts",
     max_files_per_trigger: int | None = 1,
-    await_termination_s: float | None = None,
     handle_deletes: bool = False,
     late_policy: str = "compat",
 ) -> StreamingQuery:
@@ -420,6 +375,5 @@ def run_scd2_stream(
     stream = cdc.read_envelope_stream(spark, input_path, max_files_per_trigger)
     return run_scd2_stream_from(
         spark, stream, history_path, checkpoint_path, key, ts_col,
-        await_termination_s, handle_deletes=handle_deletes,
-        late_policy=late_policy,
+        handle_deletes=handle_deletes, late_policy=late_policy,
     )

@@ -12,14 +12,16 @@ SF_DIR = "/root/testdata/sf0.001"
 def spark() -> SparkSession:
     import tempfile
 
+    # Engine conf first, so the fixture's own values (a 4g heap, not the
+    # engine's 48g default) win.
     builder = (
-        SparkSession.builder.appName("engine-tests")
+        apply_engine_conf(SparkSession.builder.appName("engine-tests"))
         .master("local[4]")
         .config("spark.ui.enabled", "false")
         .config("spark.driver.memory", "4g")
         .config("spark.sql.warehouse.dir", tempfile.mkdtemp(prefix="spark-wh-"))
     )
-    s = apply_engine_conf(builder).getOrCreate()
+    s = builder.getOrCreate()
     # Small inputs: fewer initial shuffle partitions keeps tests fast.
     s.conf.set("spark.sql.shuffle.partitions", "4")
     yield s

@@ -421,6 +421,12 @@ def test_store_time_travel_snapshots(spark, tmp_path):
     store = Scd2Store(hist_path)
     seqs = store.snapshots()
     assert len(seqs) >= 3  # several non-empty micro-batches committed
+
+    def archived(st):
+        return sorted(int(f[:-5]) for f in os.listdir(st._snapshots_dir()))
+
+    # the on-disk archive is exactly the retained window
+    assert archived(store) == seqs
     # snapshots grow monotonically in row count, and the latest equals
     # the direct read
     counts = [store.read_snapshot(spark, s).count() for s in seqs]
@@ -445,6 +451,11 @@ def test_store_time_travel_snapshots(spark, tmp_path):
         for s, c in zip(seqs, counts):
             if s in store2.snapshots():
                 assert store2.read_snapshot(spark, s).count() == c
+        # one more flip pushes the oldest seq out of the window: its
+        # archive must be pruned from disk
+        default_store.rebucket(spark, default_store.n_buckets)
+        assert archived(store2) == store2.snapshots()
+        assert seqs[0] not in store2.snapshots()
 
 
 def test_store_rebucket_replay_is_safe(spark, tmp_path):
