@@ -188,8 +188,8 @@ def _np_band_keys(cells, num_hashes: int, bands: int):
     return good, sig_good, band
 
 
-# Measured crossover (scripts/adjudicate_minhash_arrow.py, isolated
-# fresh-JVM min-of-passes): sf0.1 (5k docs) expr 1.67 s vs arrow 2.91 s
+# Measured crossover (`git show 553315e:scripts/adjudicate_minhash_arrow.py`,
+# isolated fresh-JVM min-of-passes): sf0.1 (5k docs) expr 1.67 s vs arrow 2.91 s
 # (fixed Arrow transfer dominates); sf1 (50k docs) expr 5.72 s vs arrow
 # 4.28 s (1.34×, over the ship bar). Linear fixed+per-doc fit puts the
 # break-even at ~26k docs of this corpus shape.

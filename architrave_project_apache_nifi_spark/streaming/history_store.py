@@ -6,8 +6,8 @@ micro-batch (merge → staging → final) — O(|history|) I/O per batch, a
 scale-killer at 100 TB. This store exploits the SCD2 write pattern:
 
 - closed rows (``is_current='N'``) are IMMUTABLE — once an interval has
-  a ``valid_until`` it never changes again → appended as per-batch
-  directories that are never touched again;
+  a ``valid_until`` it never changes again → each batch's closed rows
+  land in their own partition, which is never rewritten;
 - the current-rows set (one row per live key) is hash-BUCKETED by key;
   a micro-batch rewrites ONLY the buckets containing its touched keys,
   and every untouched bucket is carried forward in the manifest BY
@@ -20,24 +20,34 @@ on a cluster with a transactional table format ``commit`` maps 1:1 to a
 MERGE/commit; the protocol here is what those formats do internally):
 
     <path>/_MANIFEST.json
-        {"version": b, "seq": s, "n_buckets": n, "closed_batches": [...],
-         "closed_segments": [...], "retain_snapshots": k,
+        {"version": b, "seq": s, "n_buckets": n, "schema": {...},
+         "closed_batches": [...], "closed_segments": [...],
+         "retain_snapshots": k,
          "current_buckets": {"<bucket>": <version that last wrote it>}}
-    <path>/current/v=<b>/__bucket=<i>/   current rows of bucket i as of b
-                                         (v=<b>r<n> for rebucket rewrites)
-    <path>/closed/batch=<b>/             rows CLOSED by batch b (immutable)
-    <path>/closed/seg=<v>/               compacted closed segment (immutable)
-    <path>/_snapshots/<seq>.json         archived manifests (time travel,
-                                         retained for the last k flips)
+    <path>/v=<b>/__bucket=<i>/       current rows of bucket i as of b
+                                     (v=<b>r<n>s<seq> for rebucket rewrites)
+    <path>/v=<b>/__bucket=closed/    rows CLOSED by batch b (immutable;
+                                     absent when b closed no rows)
+    <path>/seg=<v>/                  compacted closed segment (immutable)
+    <path>/_snapshots/<seq>.json     archived manifests (time travel,
+                                     retained for the last k flips)
 
-Crash safety / effectively-exactly-once: both data writes go to
-batch-id-addressed directories (idempotent overwrite on replay of the
-same micro-batch); the manifest is flipped LAST via atomic
-``os.replace``; reference-based GC runs only after the flip. A crash
-anywhere leaves the previous manifest — and therefore the previous
-committed state — fully readable; Structured Streaming replays the
-batch, the writes land in the same directories, and the flip happens
-once. Readers never observe a half-written store.
+Each ``__bucket`` partition has its own manifest reference and so its
+own lifecycle: a closed partition lives until compaction folds it, a
+bucket until a later batch rewrites it, and a ``v=`` dir until it holds
+neither. Readers scan with the manifest's ``schema``, so no read infers
+one from file footers, and a store whose commits wrote no rows still
+reads as an empty history frame.
+
+Crash safety / effectively-exactly-once: a commit is ONE partitioned
+write of the merged batch into its batch-id-addressed ``v=<b>``
+directory (idempotent overwrite on replay of the same micro-batch); the
+manifest is flipped LAST via atomic ``os.replace``; the reference sweep
+runs only after the flip. A crash anywhere leaves the previous
+manifest — and therefore the previous committed state — fully readable;
+Structured Streaming replays the batch, the write lands in the same
+directory, and the flip happens once. Readers never observe a
+half-written store.
 """
 
 from __future__ import annotations
@@ -46,12 +56,14 @@ import json
 import os
 import shutil
 
-from pyspark import InheritableThread
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 MANIFEST = "_MANIFEST.json"
 BUCKET = "__bucket"
+#: the ``__bucket`` partition value of a batch's closed rows
+CLOSED = "closed"
 
 
 class Scd2Store:
@@ -87,28 +99,27 @@ class Scd2Store:
     def _snapshots_dir(self) -> str:
         return os.path.join(self.path, "_snapshots")
 
-    def _bucket_dir(self, version: int | str, bucket: int) -> str:
-        # version is the committing batch id, or "<id>r<n>" for a
+    def _version_dir(self, version: int | str) -> str:
+        # version is the committing batch id, or "<id>r<n>s<seq>" for a
         # rebucket rewrite (a distinct address space: batch commits
         # never write the r-suffixed form, so the two cannot collide)
-        return os.path.join(
-            self.path, "current", f"v={version}", f"{BUCKET}={bucket}"
-        )
+        return os.path.join(self.path, f"v={version}")
+
+    def _bucket_dir(self, version: int | str, bucket: int | str) -> str:
+        return os.path.join(self._version_dir(version), f"{BUCKET}={bucket}")
 
     @staticmethod
-    def _bucket_dirs(version_dir: str) -> dict[int, str]:
-        """``bucket → path`` of the bucket dirs under one ``v=`` dir."""
+    def _partitions(version_dir: str) -> set[str]:
+        """The ``__bucket`` values written under one ``v=`` dir (a write
+        always creates the dir, if only for its ``_SUCCESS`` marker)."""
         return {
-            int(d.split("=", 1)[1]): os.path.join(version_dir, d)
+            d.split("=", 1)[1]
             for d in os.listdir(version_dir)
             if d.startswith(f"{BUCKET}=")
         }
 
-    def _closed_dir(self, batch_id: int) -> str:
-        return os.path.join(self.path, "closed", f"batch={batch_id}")
-
     def _segment_dir(self, version: int) -> str:
-        return os.path.join(self.path, "closed", f"seg={version}")
+        return os.path.join(self.path, f"seg={version}")
 
     def bucket_expr(self, key_col: str | None = None) -> Column:
         key = key_col or self.key_col
@@ -129,7 +140,10 @@ class Scd2Store:
     def manifest(self) -> dict:
         with open(self._manifest_path()) as fh:
             m = json.load(fh)
-        if not {"version", "n_buckets", "closed_batches", "current_buckets"} <= set(m):
+        required = {
+            "version", "n_buckets", "schema", "closed_batches", "current_buckets"
+        }
+        if not required <= set(m):
             raise ValueError(
                 f"corrupt SCD2 store manifest at {self._manifest_path()}: {m!r}"
             )
@@ -142,13 +156,20 @@ class Scd2Store:
             wanted = sorted(refs.items(), key=lambda kv: int(kv[0]))
         else:
             wanted = [(str(b), refs[str(b)]) for b in buckets if str(b) in refs]
-        return [self._bucket_dir(v, int(b)) for b, v in wanted]
+        return [self._bucket_dir(v, b) for b, v in wanted]
 
     def _closed_paths(self, m: dict) -> list[str]:
         """Every closed-row directory ``m`` references: compacted
-        segments, then per-batch dirs."""
+        segments, then per-batch closed partitions."""
         paths = [self._segment_dir(s) for s in m.get("closed_segments", [])]
-        return paths + [self._closed_dir(b) for b in m["closed_batches"]]
+        return paths + [self._bucket_dir(b, CLOSED) for b in m["closed_batches"]]
+
+    @staticmethod
+    def _read(spark: SparkSession, m: dict, paths: list[str]) -> DataFrame:
+        """One multi-path parquet scan with ``m``'s recorded schema (no
+        partition discovery, no footer inference; no paths reads as an
+        empty history frame)."""
+        return spark.read.schema(StructType.fromJson(m["schema"])).parquet(*paths)
 
     def has_buckets(self, buckets: list[int]) -> bool:
         """True iff ANY of the given key-hash buckets has committed
@@ -164,28 +185,19 @@ class Scd2Store:
         dimension (final_template.xml:1439). ``buckets`` restricts the
         scan to the named key-hash buckets (the merge's pruned read:
         only directories holding touched keys are listed; buckets with
-        no committed rows yet are simply absent from the listing)."""
+        no committed rows yet are simply absent from the listing). A
+        store whose live keys were ALL soft-deleted is a legitimate
+        committed state: it reads as an empty frame."""
         m = self.manifest()
-        paths = self._current_paths(m, buckets)
-        if paths:
-            return spark.read.parquet(*paths)
-        # a store whose live keys were ALL soft-deleted is a legitimate
-        # committed state (zero current rows, history intact): return an
-        # empty frame with the history schema, which closed rows share
-        closed = self._closed_paths(m)
-        if closed:
-            return spark.read.parquet(*closed).limit(0)
-        raise ValueError(f"SCD2 store at {self.path} has no committed data")
+        return self._read(spark, m, self._current_paths(m, buckets))
 
     def read_all(self, spark: SparkSession) -> DataFrame:
         """Full history: compacted closed segments + committed closed
-        batches + all current buckets. One multi-path parquet scan (no
-        partition discovery needed)."""
+        batches + all current buckets."""
         return self._read_all_from(spark, self.manifest())
 
     def _read_all_from(self, spark: SparkSession, m: dict) -> DataFrame:
-        paths = self._closed_paths(m) + self._current_paths(m)
-        return spark.read.parquet(*paths)
+        return self._read(spark, m, self._closed_paths(m) + self._current_paths(m))
 
     # -- snapshots / time travel --------------------------------------------
 
@@ -275,19 +287,17 @@ class Scd2Store:
 
     def commit(
         self,
-        new_current: DataFrame,
-        closed_delta: DataFrame,
+        merged: DataFrame,
         batch_id: int,
         touched_buckets: list[int] | None = None,
     ) -> None:
         """Commit one merged micro-batch.
 
-        ``new_current`` holds the post-merge current rows of the TOUCHED
-        buckets only (the merge read exactly those buckets); closed rows
-        of the batch land in their own immutable directory, which every
-        commit references: Spark writes a schema-only part file for an
-        empty frame, so for a batch that closes no rows that directory
-        holds zero rows until ``compact_closed`` folds it.
+        ``merged`` holds the post-merge rows of the TOUCHED buckets only
+        (the merge read exactly those buckets): its current rows replace
+        those buckets, its closed rows append as the batch's closed
+        partition. A batch that closes no rows writes no closed
+        partition, and ``closed_batches`` lists it only when it did.
         ``touched_buckets`` is the merge's touched set: a touched bucket
         that ends with NO current rows (every key in it soft-deleted)
         writes no directory, and its manifest reference must be DROPPED
@@ -297,127 +307,91 @@ class Scd2Store:
 
         Write order (each step idempotent under replay of ``batch_id``):
 
-        1. closed delta → closed/batch=<id> (overwrite)
-        2. touched current buckets → current/v=<id>/__bucket=<i>
-           (partitioned write; the snapshots they were DERIVED from live
-           in other directories, so there is no same-path read/write
-           hazard and no staging double-write)
-        3. manifest flip: touched buckets point at <id> (or lose their
+        1. ONE write of ``merged``, partitioned by ``__bucket`` (the key
+           bucket of a current row, ``closed`` for a closed one), into
+           v=<id>/ (overwrite; the snapshots the merge was DERIVED from
+           live in other directories, so there is no same-path
+           read/write hazard and no staging double-write)
+        2. manifest flip: touched buckets point at <id> (or lose their
            reference if emptied), untouched buckets KEEP their old
-           references (carry-forward, zero I/O)
-        4. reference-based GC (after the flip, so a crash mid-GC can
+           references (carry-forward, zero I/O), and the schema of
+           ``merged`` is recorded for the readers
+        3. reference sweep (after the flip, so a crash mid-sweep can
            only leave orphans, never dangling references)
         """
         m = self.manifest() if self.exists() else None
-        prev_closed = m["closed_batches"] if m else []
-        prev_refs: dict[str, int] = dict(m["current_buckets"]) if m else {}
+        version_dir = self._version_dir(batch_id)
 
-        closed_dir = self._closed_dir(batch_id)
-        version_dir = os.path.join(self.path, "current", f"v={batch_id}")
+        # repartition by (key bucket, is_current) before writing: the
+        # merge plan ends at shuffle.partitions (32+) tasks, so the
+        # unshuffled write emits ~tasks×buckets near-empty parquet files
+        # per batch plus their commit-protocol renames — measured as the
+        # dominant per-micro-batch cost. One small batch-proportional
+        # shuffle buys one file per current bucket, and spreads closed
+        # rows over up to n_buckets files (the small-files story this
+        # store exists to control; compact_closed folds them later)
+        key_bucket = self.bucket_expr()
+        is_current = F.col("is_current") == "Y"
+        merged.withColumn(
+            BUCKET, F.when(is_current, key_bucket.cast("string")).otherwise(CLOSED)
+        ).repartition(key_bucket, F.col("is_current")).write.mode(
+            "overwrite"
+        ).partitionBy(BUCKET).parquet(version_dir)
 
-        # repartition to n_buckets before writing: the merge plan ends
-        # at shuffle.partitions (32+) tasks, so the unshuffled write
-        # emits ~tasks×buckets near-empty parquet files per batch plus
-        # their commit-protocol renames — measured as the dominant
-        # per-micro-batch cost. One small batch-proportional shuffle
-        # buys one file per bucket (the small-files story this store
-        # exists to control; compact_closed then has ~32× fewer files
-        # to fold)
-        def _write_closed() -> None:
-            closed_delta.repartition(
-                self.n_buckets, F.col(self.key_col)
-            ).write.mode("overwrite").parquet(closed_dir)
-
-        def _write_current() -> None:
-            bucketed = new_current.withColumn(BUCKET, self.bucket_expr())
-            bucketed.repartition(F.col(BUCKET)).write.mode(
-                "overwrite"
-            ).partitionBy(BUCKET).parquet(version_dir)
-
-        # The two writes run CONCURRENTLY (r8, VERDICT r7 #7): each is
-        # fixed-overhead dominated on a micro-batch (commit-protocol
-        # renames + writer init, not data volume — the 32 threads are
-        # mostly idle during either), and the crash protocol never
-        # ordered them: both target version-addressed directories that
-        # are orphans until the manifest flip below, which still
-        # happens strictly after BOTH complete. They share the
-        # caller-persisted `merged` lineage; cache block locks dedupe
-        # the materialization. Interleaved A/B in BASELINE.md r8:
-        # 1.21× rows/s on the bench replay.
-        # InheritableThread, not ThreadPoolExecutor (code-review r8):
-        # under pinned-thread mode (PySpark default) plain child
-        # threads do NOT inherit SparkContext local properties, so
-        # job-group cancellation (stopping the streaming query) and
-        # scheduler-pool assignment would miss the two write jobs.
-        errs: list[BaseException] = []
-
-        def _run(fn) -> None:
-            try:
-                fn()
-            except BaseException as exc:  # noqa: BLE001 — re-raised below
-                errs.append(exc)
-
-        threads = [
-            InheritableThread(target=_run, args=(fn,))
-            for fn in (_write_closed, _write_current)
-        ]
-        for t in threads:
-            t.start()
-        for t in threads:
-            t.join()
-        if errs:
-            raise errs[0]
-        written = set(self._bucket_dirs(version_dir))
-        touched = set(touched_buckets) | written if touched_buckets else written
-
-        refs = dict(prev_refs)
+        written = self._partitions(version_dir)
+        buckets = {int(b) for b in written - {CLOSED}}
+        touched = set(touched_buckets) | buckets if touched_buckets else buckets
+        refs = dict(m["current_buckets"]) if m else {}
         for b in touched:
-            if b in written:
+            if b in buckets:
                 refs[str(b)] = batch_id
             else:
                 refs.pop(str(b), None)  # bucket emptied by soft deletes
+        closed = (m or {}).get("closed_batches", [])
+        if CLOSED in written:
+            closed = sorted({*closed, batch_id})
         manifest = self._flip(
             {
                 "version": batch_id,
                 "n_buckets": self.n_buckets,
-                "closed_batches": sorted({*prev_closed, batch_id}),
+                "schema": merged.schema.jsonValue(),
+                "closed_batches": closed,
                 "closed_segments": (m or {}).get("closed_segments", []),
                 "current_buckets": refs,
             },
             prev=m,
         )
-
-        self._gc_unreferenced(manifest)
+        self._sweep(manifest)
 
     def compact_closed(
         self, spark: SparkSession, min_batches: int = 8
     ) -> bool:
-        """Fold the accumulated per-micro-batch closed directories into
+        """Fold the accumulated per-micro-batch closed partitions into
         ONE consolidated segment — the small-files maintenance every
         log-structured store needs (a 200 ms-trigger stream writes
         ~432k closed dirs/day; readers would die on file listing long
         before data volume matters). Size-tiered: each compaction folds
-        only the per-batch dirs written SINCE the last one into a new
+        only the closed partitions written SINCE the last one into a new
         segment, so compaction I/O is O(delta since last compaction),
         never O(total history) — prior segments are immutable and are
         not rewritten (Iceberg's rewrite-small-files semantics on plain
         parquet).
 
-        Returns False (no-op) below ``min_batches`` pending dirs.
+        Returns False (no-op) below ``min_batches`` pending partitions.
         Crash-safe like ``commit``: the segment is addressed by the
         manifest version (idempotent overwrite on retry), the manifest
         flips atomically afterwards, and only then are the folded
-        per-batch dirs deleted — a crash anywhere leaves a readable
+        closed partitions deleted — a crash anywhere leaves a readable
         store, at worst with orphan directories no reference keeps
         alive."""
         m = self.manifest()
         batches = m["closed_batches"]
         seg_version = m["version"]
-        self._sweep_closed_orphans(m, keep_seg=seg_version)
+        self._sweep(m)
         if len(batches) < min_batches:
             return False
         seg_dir = self._segment_dir(seg_version)
-        spark.read.parquet(*[self._closed_dir(b) for b in batches]).coalesce(
+        self._read(spark, m, [self._bucket_dir(b, CLOSED) for b in batches]).coalesce(
             max(1, len(batches) // 8)
         ).write.mode("overwrite").parquet(seg_dir)
 
@@ -431,9 +405,9 @@ class Scd2Store:
             },
             prev=m,
         )
-        # the folded dirs are now orphans, unless a retained snapshot
-        # still reads them
-        self._sweep_closed_orphans(manifest, keep_seg=seg_version)
+        # the folded partitions are now orphans, unless a retained
+        # snapshot still reads them
+        self._sweep(manifest)
         return True
 
     def rebucket(self, spark: SparkSession, new_n_buckets: int) -> None:
@@ -445,7 +419,7 @@ class Scd2Store:
         One full rewrite of the CURRENT rows only (one row per live key
         — closed history, the bulk of the store, is untouched). The
         rewrite lands in a distinct address space
-        (``current/v=<version>r<new_n>s<seq>/``) so it cannot collide
+        (``v=<version>r<new_n>s<seq>/``) so it cannot collide
         with any batch commit's directories — and, because the tag
         includes the NEXT flip seq, never with a PREVIOUS rebucket's
         either: a retry after a successful flip gets a fresh seq and so
@@ -460,13 +434,13 @@ class Scd2Store:
         tag = f"{m['version']}r{new_n_buckets}s{m.get('seq', 0) + 1}"
         self.n_buckets = new_n_buckets
         if refs:
-            cur = spark.read.parquet(*self._current_paths(m))
-            version_dir = os.path.join(self.path, "current", f"v={tag}")
+            cur = self._read(spark, m, self._current_paths(m))
+            version_dir = self._version_dir(tag)
             bucketed = cur.withColumn(BUCKET, self.bucket_expr())
             bucketed.write.mode("overwrite").partitionBy(BUCKET).parquet(
                 version_dir
             )
-            new_refs = {str(b): tag for b in self._bucket_dirs(version_dir)}
+            new_refs = {b: tag for b in self._partitions(version_dir)}
         else:
             new_refs = {}
         manifest = self._flip(
@@ -477,59 +451,40 @@ class Scd2Store:
             },
             prev=m,
         )
-        self._gc_unreferenced(manifest)
+        self._sweep(manifest)
 
-    def _sweep_closed_orphans(self, m: dict, keep_seg: int) -> None:
-        """Remove closed dirs no retained manifest references — the
-        dirs a compaction just folded, or leftovers of one that crashed
-        between its manifest flip and that delete. Only dirs strictly OLDER than the
-        manifest version are swept: an in-flight commit's pre-flip
-        ``batch=`` dir always carries a batch id > version, so it is
-        never touched even if maintenance runs beside a live stream."""
-        root = os.path.join(self.path, "closed")
-        try:
-            entries = os.listdir(root)
-        except FileNotFoundError:
-            return
-        retained = self._retained_manifests(m)
-        live_batches = {b for rm in retained for b in rm["closed_batches"]}
-        live_segs = {
-            s for rm in retained for s in rm.get("closed_segments", [])
-        } | {keep_seg}
-        for d in entries:
-            kind, _, raw = d.partition("=")
-            if not raw or not raw.lstrip("-").isdigit():
-                continue
-            v = int(raw)
-            dead = (
-                kind == "batch" and v not in live_batches and v <= m["version"]
-            ) or (kind == "seg" and v not in live_segs)
-            if dead:
-                shutil.rmtree(os.path.join(root, d), ignore_errors=True)
-
-    def _gc_unreferenced(self, manifest: dict) -> None:
-        """Delete current-bucket directories no RETAINED manifest's
-        reference keeps alive. Untouched buckets may legitimately point
-        at arbitrarily old versions forever, so GC is reference-based,
-        not age-based; with snapshot retention > 1, directories stay
-        until every snapshot referencing them expires."""
+    def _sweep(self, m: dict) -> None:
+        """Delete every data directory no RETAINED manifest references:
+        bucket and closed partitions under ``v=`` dirs, compacted
+        segments, and a ``v=`` dir once it holds neither — the
+        partitions a commit superseded or a compaction folded, and the
+        leftovers of one that crashed between its flip and this sweep.
+        Untouched buckets may legitimately point at arbitrarily old
+        versions forever, so the sweep is reference-based, not
+        age-based; with snapshot retention > 1, directories stay until
+        every snapshot referencing them expires. Dirs whose batch id is
+        ABOVE the manifest version are never touched: an in-flight
+        commit's pre-flip ``v=`` dir always carries one, even if
+        maintenance runs beside a live stream."""
         live = {
-            (str(v), int(b))
-            for rm in self._retained_manifests(manifest)
-            for b, v in rm["current_buckets"].items()
+            p
+            for rm in self._retained_manifests(m)
+            for p in self._closed_paths(rm) + self._current_paths(rm)
         }
-        cur_root = os.path.join(self.path, "current")
-        try:
-            version_dirs = os.listdir(cur_root)
-        except FileNotFoundError:
-            return
-        for vd in version_dirs:
-            if not vd.startswith("v="):
+        for d in os.listdir(self.path):
+            kind, _, raw = d.partition("=")
+            batch = raw.partition("r")[0]  # rebucket tags: <id>r<n>s<seq>
+            if kind not in ("v", "seg") or not batch.isdigit():
                 continue
-            version = vd.split("=", 1)[1]
-            vpath = os.path.join(cur_root, vd)
-            for bucket, bpath in self._bucket_dirs(vpath).items():
-                if (version, bucket) not in live:
-                    shutil.rmtree(bpath, ignore_errors=True)
-            if not self._bucket_dirs(vpath):
-                shutil.rmtree(vpath, ignore_errors=True)
+            if int(batch) > m["version"]:
+                continue  # a commit still in flight
+            top = os.path.join(self.path, d)
+            if kind == "seg":
+                parts = [top]
+            else:
+                parts = [self._bucket_dir(raw, p) for p in self._partitions(top)]
+            for p in parts:
+                if p not in live:
+                    shutil.rmtree(p, ignore_errors=True)
+            if kind == "v" and not self._partitions(top):
+                shutil.rmtree(top, ignore_errors=True)

@@ -8,7 +8,9 @@ Each micro-batch is evaluated against the caller's rules
 (operators/quality.check_constraints — ONE aggregation pass however
 many rules). Batches that pass commit to ``root/accepted/batch=<id>``;
 batches with any violation divert WHOLE to
-``root/quarantine/batch=<id>`` plus a one-file constraint report —
+``root/quarantine/batch=<id>``, with a one-file constraint report in
+the sibling ``root/reports/batch=<id>`` (outside the data root, whose
+``batch=<id>`` dirs ``commitdirs.read_committed`` unions) —
 all-or-nothing per batch, because a half-admitted batch is exactly the
 partial-failure state the reference's racing sinks produce
 (final_template.xml Task1/Task2) and this engine exists to rule out.
@@ -51,9 +53,7 @@ def gate_batch(
     side = "accepted" if ok else "quarantine"
     write_batch(batch, os.path.join(root, side), batch_id)
     if not ok:
-        report.coalesce(1).write.mode("overwrite").parquet(
-            os.path.join(root, "quarantine", f"batch={batch_id}_report")
-        )
+        write_batch(report.coalesce(1), os.path.join(root, "reports"), batch_id)
     return ok
 
 

@@ -6,11 +6,12 @@ insert new) + (Task 2 lookup old current → expire UPDATE)].
 
 Engine: one ``foreachBatch`` running the deterministic batch merge
 (operators/scd2.scd2_apply) against the incremental manifest-committed
-history store (history_store.Scd2Store: immutable per-batch closed-row
-directories + a replaced current-rows snapshot — O(|current|+|batch|)
-I/O per micro-batch, never O(|history|)). This collapses the
-reference's two racing sinks into one atomic commit-per-micro-batch,
-fixing Bugs 1-3 (SURVEY.md §2.8):
+history store (history_store.Scd2Store: each micro-batch is ONE
+partitioned write — its closed rows as an immutable partition, its
+touched current-row buckets as replacements — then a manifest flip;
+O(|touched current|+|batch|) I/O per micro-batch, never O(|history|)).
+This collapses the reference's two racing sinks into one atomic
+commit-per-micro-batch, fixing Bugs 1-3 (SURVEY.md §2.8):
 
 - within-batch multi-updates to one key chain correctly (window lead);
 - expire-then-insert is one plan — no race;
@@ -191,31 +192,13 @@ def _merge_batch(
                 changes, key, ts_col, order_cols=("cdc_sequence_id",),
                 tombstone_col=tombstone_col, skew_protection=False,
             )
-        _commit_merged(store, merged, batch_id, touched or None)
+        store.commit(merged, batch_id, touched or None)
     finally:
         _pinned.unpersist()
     if compact_every:
         # post-commit maintenance in the same single-writer thread:
-        # folds accumulated per-batch closed dirs once enough pile up
+        # folds accumulated per-batch closed partitions once enough pile up
         store.compact_closed(spark, min_batches=compact_every)
-
-
-def _commit_merged(
-    store: Scd2Store, merged: DataFrame, batch_id: int,
-    touched: list[int] | None = None,
-) -> None:
-    """Commit a merged history frame: its current rows replace the
-    touched buckets, its closed rows append (``Scd2Store.commit``)."""
-    merged = merged.persist()  # one evaluation feeds both commit writes
-    try:
-        store.commit(
-            new_current=merged.filter(F.col("is_current") == "Y"),
-            closed_delta=merged.filter(F.col("is_current") == "N"),
-            batch_id=batch_id,
-            touched_buckets=touched,
-        )
-    finally:
-        merged.unpersist()
 
 
 def splice_quarantine(
@@ -253,7 +236,7 @@ def splice_quarantine(
     out_store = Scd2Store(out_path, key_col=key, n_buckets=n_buckets)
     if out_store.exists():
         raise FileExistsError(f"splice target already exists: {out_path}")
-    _commit_merged(out_store, merged, 0)
+    out_store.commit(merged, 0)
     return n_late
 
 
@@ -284,7 +267,7 @@ def run_scd2_stream_from(
     dropped, README.md:28); True soft-closes the deleted key's current
     row at the delete timestamp (scd2 tombstones) — beyond-reference.
     ``compact_every=N`` runs closed-batch compaction after any commit
-    that leaves ≥ N per-batch closed dirs pending (the small-files
+    that leaves ≥ N per-batch closed partitions pending (the small-files
     maintenance a 200 ms-trigger stream needs; see
     ``Scd2Store.compact_closed``). ``retain_snapshots=K`` keeps the
     last K committed snapshots readable (``Scd2Store.read_snapshot`` —

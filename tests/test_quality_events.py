@@ -141,10 +141,16 @@ def test_streaming_quality_gate_routes_batches(spark, tmp_path):
         os.path.join(root, "quarantine", "batch=1")
     )
     assert sorted(r["id"] for r in quarantined.collect()) == [3, 4]
-    report = spark.read.parquet(
-        os.path.join(root, "quarantine", "batch=1_report")
-    ).collect()
+    report = spark.read.parquet(os.path.join(root, "reports", "batch=1")).collect()
     assert report[0]["rule"] == "price_positive" and report[0]["passed"] == 0
+    # the report lives outside the data root, so the committed-batch
+    # reader over quarantine/ sees data batches only
+    from architrave_project_apache_nifi_spark.streaming.commitdirs import (
+        read_committed,
+    )
+
+    committed = read_committed(spark, os.path.join(root, "quarantine"))
+    assert sorted(r["id"] for r in committed.collect()) == [3, 4]
 
 
 def test_winsorize_clamps_tails_only(spark):

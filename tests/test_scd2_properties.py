@@ -195,8 +195,6 @@ def test_store_random_batches_with_maintenance(spark, tmp_path_factory, events, 
     compaction / rebucketing interleaved after any commit: the final
     read_all equals the one-shot scd2_build of all events, and every
     retained snapshot stays readable."""
-    import pyspark.sql.functions as F
-
     from architrave_project_apache_nifi_spark.streaming.history_store import (
         Scd2Store,
     )
@@ -224,12 +222,7 @@ def test_store_random_batches_with_maintenance(spark, tmp_path_factory, events, 
             )
         else:
             merged = scd2_build(changes, "ProductID", "change_ts", ("seq",))
-        store.commit(
-            new_current=merged.filter(F.col("is_current") == "Y"),
-            closed_delta=merged.filter(F.col("is_current") == "N"),
-            batch_id=batch_id,
-            touched_buckets=touched or None,
-        )
+        store.commit(merged, batch_id, touched_buckets=touched or None)
         op = ops[batch_id % len(ops)]
         if op == "compact":
             store.compact_closed(spark, min_batches=1)

@@ -72,7 +72,7 @@ def _snapshot_files(root):
 
 def test_stream_incremental_store_never_rewrites_closed_batches(spark, tmp_path):
     """The scale contract of the incremental store: committed closed-row
-    directories are immutable — later micro-batches must not rewrite
+    partitions are immutable — later micro-batches must not rewrite
     (or even touch) them, and per-batch I/O is O(current + delta)."""
     import json
     import os
@@ -86,17 +86,21 @@ def test_stream_incremental_store_never_rewrites_closed_batches(spark, tmp_path)
     hist_path, ckpt = str(tmp_path / "hist"), str(tmp_path / "ckpt")
     q = run_scd2_stream(spark, str(src), hist_path, ckpt, max_files_per_trigger=1)
     q.awaitTermination()
-    closed_root = os.path.join(hist_path, "closed")
-    current_root = os.path.join(hist_path, "current")
-    before = _snapshot_files(closed_root)
+    def closed_files():
+        return {
+            p: sig for p, sig in _snapshot_files(hist_path).items()
+            if "__bucket=closed" in p
+        }
+
+    before = closed_files()
     assert before, "expected committed closed batches after the golden run"
     # keys 9012/9013/9014 hash to distinct buckets (2/4/14 of 16), so the
     # next batch (touching only 9014) must carry 9012's and 9013's
     # current-bucket files forward BY REFERENCE — byte-identical
     current_before = {
         p: sig
-        for p, sig in _snapshot_files(current_root).items()
-        if "__bucket=14" not in p
+        for p, sig in _snapshot_files(hist_path).items()
+        if "__bucket=" in p and "__bucket=14" not in p and p not in before
     }
     assert current_before, "expected untouched current buckets to exist"
 
@@ -106,12 +110,12 @@ def test_stream_incremental_store_never_rewrites_closed_batches(spark, tmp_path)
     q2 = run_scd2_stream(spark, str(src), hist_path, ckpt, max_files_per_trigger=1)
     q2.awaitTermination()
 
-    after = _snapshot_files(closed_root)
+    after = closed_files()
     for path, sig in before.items():
         assert after.get(path) == sig, f"closed file rewritten: {path}"
     assert len(after) > len(before)  # the new batch added its own closed dir
 
-    current_after = _snapshot_files(current_root)
+    current_after = _snapshot_files(hist_path)
     for path, sig in current_before.items():
         assert current_after.get(path) == sig, f"untouched bucket rewritten: {path}"
 
@@ -166,7 +170,7 @@ def test_stream_corrupt_store_fails_batch_instead_of_rebuilding(spark, tmp_path)
     # corrupt: delete the current snapshot the manifest references
     with open(os.path.join(hist_path, "_MANIFEST.json")) as fh:
         version = json.load(fh)["version"]
-    shutil.rmtree(os.path.join(hist_path, "current", f"v={version}"))
+    shutil.rmtree(os.path.join(hist_path, f"v={version}"))
 
     with open(src / "events_9999.json", "w") as fh:
         from architrave_project_apache_nifi_spark.sources.cdc import _envelope
@@ -182,6 +186,7 @@ def test_store_compaction_folds_closed_batches(spark, tmp_path):
     segment; rows are identical before and after; a later compaction
     does NOT rewrite the first segment (size-tiered: I/O is O(delta
     since last compaction)); and sub-threshold calls are no-ops."""
+    import glob
     import json
     import os
 
@@ -207,12 +212,11 @@ def test_store_compaction_folds_closed_batches(spark, tmp_path):
     m = store.manifest()
     assert m["closed_batches"] == []
     assert len(m["closed_segments"]) == 1
-    closed_root = os.path.join(hist_path, "closed")
-    assert not [d for d in os.listdir(closed_root) if d.startswith("batch=")]
+    assert not glob.glob(os.path.join(hist_path, "v=*", "__bucket=closed"))
     assert sorted(map(tuple, read_history(spark, hist_path).collect())) == before_rows
 
     seg1_files = {
-        p: sig for p, sig in _snapshot_files(closed_root).items()
+        p: sig for p, sig in _snapshot_files(hist_path).items() if "seg=" in p
     }
     assert seg1_files
 
@@ -230,7 +234,7 @@ def test_store_compaction_folds_closed_batches(spark, tmp_path):
     assert store.compact_closed(spark, min_batches=2) is True
     m2 = store.manifest()
     assert len(m2["closed_segments"]) == 2
-    after = _snapshot_files(closed_root)
+    after = _snapshot_files(hist_path)
     for p, sig in seg1_files.items():
         assert after.get(p) == sig, f"prior segment rewritten: {p}"
 
@@ -242,7 +246,7 @@ def test_store_compaction_folds_closed_batches(spark, tmp_path):
 
 def test_store_compaction_crash_between_flip_and_delete_is_safe(spark, tmp_path):
     """A compaction that crashed after the manifest flip but before
-    deleting the folded per-batch dirs leaves orphans: the store reads
+    deleting the folded closed partitions leaves orphans: the store reads
     correctly (no duplicates — orphans are unreferenced) and the next
     compaction sweeps them."""
     import os
@@ -260,13 +264,13 @@ def test_store_compaction_crash_between_flip_and_delete_is_safe(spark, tmp_path)
     before_rows = sorted(map(tuple, read_history(spark, hist_path).collect()))
     folded = list(store.manifest()["closed_batches"])
 
-    # simulate the crash: run compaction, then resurrect one folded dir
-    # as if its delete never happened
+    # simulate the crash: run compaction with the closed-partition
+    # deletes intercepted, as if they never happened
     orig_rmtree = __import__("shutil").rmtree
     kept: list[str] = []
 
     def fake_rmtree(p, ignore_errors=False):
-        if os.path.basename(p).startswith("batch="):
+        if os.path.basename(p) == "__bucket=closed":
             kept.append(p)
             return  # "crash": deletes never ran
         orig_rmtree(p, ignore_errors=ignore_errors)
@@ -344,6 +348,7 @@ def test_store_rebucket_rescales_and_keeps_merging(spark, tmp_path):
     count wins over the caller's, and later micro-batches merge
     correctly against the re-bucketed snapshot (touched-bucket math uses
     the new count)."""
+    import glob
     import json
     import os
     import time as _time
@@ -366,9 +371,10 @@ def test_store_rebucket_rescales_and_keeps_merging(spark, tmp_path):
     assert m["n_buckets"] == 4
     assert all("r4s" in str(v) for v in m["current_buckets"].values())
     assert sorted(map(tuple, read_history(spark, hist_path).collect())) == before
-    # all current rows live under the rebucket address space now
-    cur_root = os.path.join(hist_path, "current")
-    assert all("r4" in d for d in os.listdir(cur_root) if d.startswith("v="))
+    # all current rows live under the rebucket address space now (the
+    # closed partitions stay where their batches wrote them)
+    buckets = glob.glob(os.path.join(hist_path, "v=*", "__bucket=*"))
+    assert all("r4" in b for b in buckets if not b.endswith("=closed"))
 
     # a later batch merges against the re-bucketed snapshot even though
     # the stream caller still passes the default n_buckets=16
@@ -668,14 +674,12 @@ def test_stream_bulk_replay_throughput_harness(spark, tmp_path):
     assert a == b
 
 
-def test_store_commit_partial_concurrent_write_failure_is_replayable(
-    spark, tmp_path
-):
-    """r8's concurrent commit writes introduce one NEW interleaving:
-    one write lands while its sibling raises. The protocol must hold —
-    the manifest never flips (both directories stay unreferenced
-    orphans), the store keeps serving the previous version, and a
-    clean retry of the SAME batch id commits exactly once."""
+def test_store_commit_failed_write_is_replayable(spark, tmp_path):
+    """A commit whose one write fails mid-job must hold the protocol:
+    the manifest never flips (the batch's partial directory stays an
+    unreferenced orphan), the store keeps serving the previous version,
+    and a clean retry of the SAME batch id commits exactly once."""
+    import pytest
     from pyspark.sql import functions as F
 
     from architrave_project_apache_nifi_spark.streaming.history_store import (
@@ -684,43 +688,64 @@ def test_store_commit_partial_concurrent_write_failure_is_replayable(
 
     hist = str(tmp_path / "hist")
     store = Scd2Store(hist, key_col="ProductID", n_buckets=4)
-    cur0 = spark.createDataFrame(
-        [(1, "a", "Y"), (2, "b", "Y")], "ProductID INT, v STRING, is_current STRING"
-    )
-    store.commit(
-        new_current=cur0,
-        closed_delta=cur0.limit(0),
-        batch_id=0,
-    )
-    v0 = store.manifest()["version"]
+    schema = "ProductID INT, v STRING, is_current STRING"
+    store.commit(spark.createDataFrame([(1, "a", "Y"), (2, "b", "Y")], schema), 0)
+    m0 = store.manifest()
     rows0 = sorted(map(tuple, store.read_current(spark).collect()))
 
-    # batch 1: the closed-delta side is poisoned (evaluates to a raise
-    # inside its write job); the current side is valid and may or may
-    # not land first — either order must leave the store unflipped
+    # batch 1: its closed row is poisoned (evaluates to a raise inside
+    # the write job); its current rows are valid and their tasks may
+    # land first — either way the store must stay unflipped
     @F.udf("string")
     def boom(v):
         raise RuntimeError("injected write failure")
 
-    cur1 = spark.createDataFrame(
-        [(1, "a2", "Y")], "ProductID INT, v STRING, is_current STRING"
+    merged1 = spark.createDataFrame(
+        [(1, "a2", "Y"), (1, "a", "N"), (2, "b", "Y")], schema
     )
-    poisoned = cur1.withColumn("v", boom("v")).filter("v IS NOT NULL")
-    import pytest
-
+    poisoned = merged1.withColumn(
+        "v", F.when(F.col("is_current") == "N", boom("v")).otherwise(F.col("v"))
+    )
     with pytest.raises(Exception, match="injected write failure"):
-        store.commit(new_current=cur1, closed_delta=poisoned, batch_id=1)
+        store.commit(poisoned, 1)
 
     # protocol held: no flip, previous version still serves
-    assert store.manifest()["version"] == v0
-    assert 1 not in store.manifest()["closed_batches"]
+    assert store.manifest() == m0
     assert sorted(map(tuple, store.read_current(spark).collect())) == rows0
 
     # clean retry of the same batch id commits exactly once
-    closed1 = spark.createDataFrame(
-        [(1, "a", "N")], "ProductID INT, v STRING, is_current STRING"
+    store.commit(merged1, 1)
+    m1 = store.manifest()
+    assert m1["version"] == 1 and m1["seq"] == m0["seq"] + 1
+    assert m1["closed_batches"] == [1]
+    assert sorted(map(tuple, store.read_all(spark).collect())) == sorted(
+        [(1, "a", "N"), (1, "a2", "Y"), (2, "b", "Y")]
     )
-    store.commit(new_current=cur1, closed_delta=closed1, batch_id=1)
-    assert store.manifest()["version"] == 1
-    got = sorted(map(tuple, store.read_current(spark).collect()))
-    assert got == [(1, "a2", "Y")] or (1, "a2", "Y") in got
+
+
+def test_store_commits_of_few_or_no_rows(spark, tmp_path):
+    """A batch that closes no rows writes no closed partition, and
+    ``closed_batches`` lists only written ones; a store whose commits
+    wrote no rows at all reads as an empty frame with the history
+    columns (the manifest's schema — no data file carries one)."""
+    import os
+
+    from architrave_project_apache_nifi_spark.streaming.history_store import (
+        Scd2Store,
+    )
+
+    schema = "ProductID INT, v STRING, is_current STRING"
+    store = Scd2Store(str(tmp_path / "cur"), key_col="ProductID", n_buckets=4)
+    store.commit(spark.createDataFrame([(1, "a", "Y"), (2, "b", "Y")], schema), 0)
+    assert store.manifest()["closed_batches"] == []
+    assert not os.path.exists(os.path.join(store.path, "v=0", "__bucket=closed"))
+    assert store.read_all(spark).count() == 2
+
+    empty = Scd2Store(str(tmp_path / "empty"), key_col="ProductID", n_buckets=4)
+    empty.commit(spark.createDataFrame([], schema), 0)
+    m = empty.manifest()
+    assert m["closed_batches"] == [] and m["current_buckets"] == {}
+    assert not os.path.exists(os.path.join(empty.path, "v=0"))  # swept
+    for df in (empty.read_all(spark), empty.read_current(spark)):
+        assert df.columns == ["ProductID", "v", "is_current"]
+        assert df.count() == 0
