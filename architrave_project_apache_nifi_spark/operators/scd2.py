@@ -36,6 +36,8 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 SCD2_COLS = ("valid_from", "valid_until", "is_current")
+#: The most per-key summary rows a merge broadcasts to every task.
+MAX_BROADCAST_KEYS = 1_000_000
 
 
 def _as_list(cols: str | Sequence[str]) -> list[str]:
@@ -257,18 +259,6 @@ def scd2_stamp_new(changes: DataFrame, ts_col: str | None = None) -> DataFrame:
     )
 
 
-def scd2_expire(history: DataFrame, until_ts=None) -> DataFrame:
-    """Expire rows: the update-route ``modify-overwrite-beta`` spec
-    "update the required fields" (final_template.xml:2402-2419):
-    ``valid_until = now`` (formatted string in the reference,
-    final_template.xml:2408 — we keep TimestampType), ``Is_current='N'``.
-    """
-    until = F.current_timestamp() if until_ts is None else until_ts
-    return history.withColumn("valid_until", until).withColumn(
-        "is_current", F.lit("N")
-    )
-
-
 def _fits_broadcast(
     changes: DataFrame, summary: DataFrame, max_keys: int
 ) -> bool:
@@ -293,7 +283,7 @@ def scd2_apply(
     ts_col: str,
     order_cols: Sequence[str] = (),
     broadcast_changes: bool | None = None,
-    max_broadcast_keys: int = 1_000_000,
+    max_broadcast_keys: int = MAX_BROADCAST_KEYS,
     tombstone_col: str | None = None,
     skew_protection: bool | str = "auto",
 ) -> DataFrame:
@@ -358,12 +348,44 @@ def scd2_apply(
     return updated_history.unionByName(new_versions)
 
 
+def _probe_late(
+    history: DataFrame,
+    changes: DataFrame,
+    keys: list[str],
+    ts_col: str,
+    small_batch: bool,
+) -> DataFrame:
+    """``changes`` plus the boolean ``__late`` of :func:`scd2_split_late`.
+    ``small_batch`` decides BOTH broadcasts: the latest-``valid_from``
+    summary has one row per touched key, so a batch over the broadcast
+    bound must shuffle-join both sides or the second one OOMs the driver."""
+    touched = changes.select(*keys).distinct()
+    if small_batch:
+        touched = F.broadcast(touched)
+    latest = (
+        history.join(touched, on=keys, how="left_semi")
+        .groupBy(*keys)
+        .agg(F.max("valid_from").alias("__latest_from"))
+    )
+    if small_batch:
+        latest = F.broadcast(latest)
+    # NULL ts must not vanish (NULL <= x is NULL, failing BOTH filters):
+    # coalesce to on-time, matching scd2_apply's arrival-order trust.
+    is_late = F.coalesce(
+        F.col("__latest_from").isNotNull()
+        & (F.col(ts_col) <= F.col("__latest_from")),
+        F.lit(False),
+    )
+    probed = changes.join(latest, on=keys, how="left")
+    return probed.withColumn("__late", is_late).drop("__latest_from")
+
+
 def scd2_split_late(
     history: DataFrame,
     changes: DataFrame,
     key_cols: str | Sequence[str],
     ts_col: str,
-    max_broadcast_keys: int = 1_000_000,
+    max_broadcast_keys: int = MAX_BROADCAST_KEYS,
 ) -> tuple[DataFrame, DataFrame]:
     """Partition a change batch into (on_time, late) relative to an
     existing SCD2 history — the QUARANTINE half of the cross-batch
@@ -390,31 +412,12 @@ def scd2_split_late(
     touched key) broadcasts back against the batch.
     """
     keys = _as_list(key_cols)
-    touched = changes.select(*keys).distinct()
-    # One gate decides BOTH broadcasts: `latest` is one row per
-    # touched key (same cardinality), so a >max_broadcast_keys batch must
-    # shuffle-join on both sides or the second broadcast OOMs the driver.
-    small_batch = _fits_broadcast(changes, touched, max_broadcast_keys)
-    if small_batch:
-        touched = F.broadcast(touched)
-    latest = (
-        history.join(touched, on=keys, how="left_semi")
-        .groupBy(*keys)
-        .agg(F.max("valid_from").alias("__latest_from"))
+    small_batch = _fits_broadcast(
+        changes, changes.select(*keys).distinct(), max_broadcast_keys
     )
-    if small_batch:
-        latest = F.broadcast(latest)
-    probed = changes.join(latest, on=keys, how="left")
-    # NULL ts must not vanish (NULL <= x is NULL, failing BOTH filters):
-    # coalesce to on-time, matching scd2_apply's arrival-order trust.
-    is_late = F.coalesce(
-        F.col("__latest_from").isNotNull()
-        & (F.col(ts_col) <= F.col("__latest_from")),
-        F.lit(False),
-    )
-    on_time = probed.filter(~is_late).drop("__latest_from")
-    late = probed.filter(is_late).drop("__latest_from")
-    return on_time, late
+    probed = _probe_late(history, changes, keys, ts_col, small_batch)
+    late = F.col("__late")
+    return probed.filter(~late).drop("__late"), probed.filter(late).drop("__late")
 
 
 def scd2_apply_late(
@@ -425,7 +428,7 @@ def scd2_apply_late(
     order_cols: Sequence[str] = (),
     tombstone_col: str | None = None,
     dedupe: bool = True,
-    max_broadcast_keys: int = 1_000_000,
+    max_broadcast_keys: int = MAX_BROADCAST_KEYS,
     skewed_rebuild: bool = False,
     hot_key_rows: int = 5_000_000,
     n_ts_buckets: int = 32,
@@ -639,10 +642,9 @@ def scd2_apply_evolved(
     # The changes side never adopts SCD2 protocol columns — scd2_apply
     # stamps them itself via scd2_build; adopting NULL copies first
     # would shadow the stamping.
-    protocol = ("valid_from", "valid_until", "is_current")
     return scd2_apply(
         widen_like(history, changes, exclude=(ts_col,)),
-        widen_like(changes, history, exclude=protocol),
+        widen_like(changes, history, exclude=SCD2_COLS),
         key_cols,
         ts_col,
         order_cols,

@@ -55,6 +55,7 @@ from __future__ import annotations
 import json
 import os
 import shutil
+from collections.abc import Iterable
 
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -121,11 +122,10 @@ class Scd2Store:
     def _segment_dir(self, version: int) -> str:
         return os.path.join(self.path, f"seg={version}")
 
-    def bucket_expr(self, key_col: str | None = None) -> Column:
-        key = key_col or self.key_col
-        if key is None:
+    def bucket_expr(self) -> Column:
+        if self.key_col is None:
             raise ValueError("Scd2Store needs key_col for bucket computation")
-        return F.pmod(F.xxhash64(F.col(key)), F.lit(self.n_buckets))
+        return F.pmod(F.xxhash64(F.col(self.key_col)), F.lit(self.n_buckets))
 
     # -- read side ----------------------------------------------------------
 
@@ -152,11 +152,8 @@ class Scd2Store:
 
     def _current_paths(self, m: dict, buckets: list[int] | None = None) -> list[str]:
         refs = m["current_buckets"]
-        if buckets is None:
-            wanted = sorted(refs.items(), key=lambda kv: int(kv[0]))
-        else:
-            wanted = [(str(b), refs[str(b)]) for b in buckets if str(b) in refs]
-        return [self._bucket_dir(v, b) for b, v in wanted]
+        wanted = sorted(refs, key=int) if buckets is None else map(str, buckets)
+        return [self._bucket_dir(refs[b], b) for b in wanted if b in refs]
 
     def _closed_paths(self, m: dict) -> list[str]:
         """Every closed-row directory ``m`` references: compacted
@@ -170,13 +167,6 @@ class Scd2Store:
         partition discovery, no footer inference; no paths reads as an
         empty history frame)."""
         return spark.read.schema(StructType.fromJson(m["schema"])).parquet(*paths)
-
-    def has_buckets(self, buckets: list[int]) -> bool:
-        """True iff ANY of the given key-hash buckets has committed
-        current rows (all-new-key batches may touch only virgin
-        buckets — the merge then has no current rows to read)."""
-        refs = self.manifest()["current_buckets"]
-        return any(str(b) in refs for b in buckets)
 
     def read_current(
         self, spark: SparkSession, buckets: list[int] | None = None
@@ -289,7 +279,7 @@ class Scd2Store:
         self,
         merged: DataFrame,
         batch_id: int,
-        touched_buckets: list[int] | None = None,
+        touched_buckets: Iterable[int] = (),
     ) -> None:
         """Commit one merged micro-batch.
 
@@ -298,12 +288,12 @@ class Scd2Store:
         those buckets, its closed rows append as the batch's closed
         partition. A batch that closes no rows writes no closed
         partition, and ``closed_batches`` lists it only when it did.
-        ``touched_buckets`` is the merge's touched set: a touched bucket
-        that ends with NO current rows (every key in it soft-deleted)
-        writes no directory, and its manifest reference must be DROPPED
-        — deriving touched-ness from written directories alone would
-        silently resurrect the stale pre-merge rows. ``None`` (the
-        first-batch build path) means "exactly the buckets written".
+        ``touched_buckets`` is the merge's touched set (empty for a
+        whole-table commit, as in splice): a touched bucket that ends
+        with NO current rows (every key in it soft-deleted) writes no
+        directory, and its manifest reference must be DROPPED —
+        deriving touched-ness from written directories alone would
+        silently resurrect the stale pre-merge rows.
 
         Write order (each step idempotent under replay of ``batch_id``):
 
@@ -340,13 +330,10 @@ class Scd2Store:
 
         written = self._partitions(version_dir)
         buckets = {int(b) for b in written - {CLOSED}}
-        touched = set(touched_buckets) | buckets if touched_buckets else buckets
         refs = dict(m["current_buckets"]) if m else {}
-        for b in touched:
-            if b in buckets:
-                refs[str(b)] = batch_id
-            else:
-                refs.pop(str(b), None)  # bucket emptied by soft deletes
+        for b in set(touched_buckets) - buckets:
+            refs.pop(str(b), None)  # bucket emptied by soft deletes
+        refs.update({str(b): batch_id for b in buckets})
         closed = (m or {}).get("closed_batches", [])
         if CLOSED in written:
             closed = sorted({*closed, batch_id})
@@ -430,19 +417,15 @@ class Scd2Store:
         unreferenced; same-seq retry overwrites it idempotently).
         Requires ``key_col``."""
         m = self.manifest()
-        refs = m["current_buckets"]
         tag = f"{m['version']}r{new_n_buckets}s{m.get('seq', 0) + 1}"
         self.n_buckets = new_n_buckets
-        if refs:
-            cur = self._read(spark, m, self._current_paths(m))
-            version_dir = self._version_dir(tag)
-            bucketed = cur.withColumn(BUCKET, self.bucket_expr())
-            bucketed.write.mode("overwrite").partitionBy(BUCKET).parquet(
-                version_dir
-            )
-            new_refs = {b: tag for b in self._partitions(version_dir)}
-        else:
-            new_refs = {}
+        # a store with no current rows reads as an empty frame and writes
+        # no partition; the sweep then removes the empty v= dir
+        cur = self._read(spark, m, self._current_paths(m))
+        version_dir = self._version_dir(tag)
+        bucketed = cur.withColumn(BUCKET, self.bucket_expr())
+        bucketed.write.mode("overwrite").partitionBy(BUCKET).parquet(version_dir)
+        new_refs = {b: tag for b in self._partitions(version_dir)}
         manifest = self._flip(
             {
                 **m,

@@ -11,9 +11,13 @@ business key.
 
 Semantics per table = exactly ``run_scd2_stream_from`` (scd2_stream.py
 ``_merge_batch``: within-batch version chaining, bucket-scoped I/O,
-batch-id idempotent replay) — the demux adds routing, not a second
-merge implementation. Events for tables with no registered spec are
-DROPPED, mirroring RouteOnAttribute's unmatched-terminate contract
+batch-id idempotent replay, one probe per question) — the demux adds
+routing, not a second merge implementation. Each table's merge asks
+Spark about its slice of the batch with one aggregate (touched buckets
+and row count; a table with no events in the batch stops there), plus
+one late-split aggregate when its spec says "quarantine". Events for
+tables with no registered spec are DROPPED, mirroring
+RouteOnAttribute's unmatched-terminate contract
 (final_template.xml:1946-1983); register a catch-all spec or a failure
 sink if they must be kept.
 

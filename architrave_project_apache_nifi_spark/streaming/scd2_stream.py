@@ -9,7 +9,8 @@ Engine: one ``foreachBatch`` running the deterministic batch merge
 history store (history_store.Scd2Store: each micro-batch is ONE
 partitioned write — its closed rows as an immutable partition, its
 touched current-row buckets as replacements — then a manifest flip;
-O(|touched current|+|batch|) I/O per micro-batch, never O(|history|)).
+O(|touched current|+|batch|) I/O per micro-batch, never O(|history|)),
+after one probe per question over persisted frames (``_merge_changes``).
 This collapses the reference's two racing sinks into one atomic
 commit-per-micro-batch, fixing Bugs 1-3 (SURVEY.md §2.8):
 
@@ -36,7 +37,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 
-from ..operators.scd2 import scd2_apply, scd2_build, scd2_split_late
+from ..operators.scd2 import MAX_BROADCAST_KEYS, _probe_late, scd2_apply, scd2_build
 from ..sources import cdc
 from .commitdirs import read_committed, start_foreach_batch, write_batch
 from .history_store import Scd2Store
@@ -87,32 +88,10 @@ def _merge_batch(
     flatten_fn=cdc.flatten_events,
     late_policy: str = "compat",
 ) -> None:
-    """Merge one micro-batch into the incremental history store.
-
-    ``flatten_fn(batch, keep)`` overrides the envelope→columns pivot
-    (default: the products_catalog flatten, ``cdc.flatten_events``) —
-    the hook the multi-table demux (multi_table.py) uses to give each
-    routed table its own column set and types.
-
-    Closed SCD2 rows are immutable, so the merge runs against the
-    current-rows snapshot only (``scd2_apply`` never modifies
-    ``is_current='N'`` rows — they would pass through verbatim) — and
-    only against the key-hash BUCKETS the batch actually touches: the
-    touched-bucket set (≤ n_buckets ints) is computed from the batch's
-    keys, the store scans exactly those bucket directories, and the
-    commit rewrites exactly those buckets while untouched buckets carry
-    forward by manifest reference. Per-batch I/O is
-    O(|touched-bucket current rows| + |batch|) — independent of both
-    accumulated history and total live-key count.
-
-    Exactly-once: the store records the committed batch id; a replayed
-    micro-batch (crash between store commit and checkpoint commit) is
-    detected by ``version >= batch_id`` and skipped — the store and the
-    checkpoint form a pair (wiping one requires wiping the other).
-    A missing store is detected EXPLICITLY via the manifest; a corrupt
-    or unreadable store raises and fails the batch instead of being
-    silently rebuilt from one micro-batch.
-    """
+    """:func:`_merge_changes` over one envelope micro-batch's flat rows,
+    then compaction once ``compact_every`` closed partitions are pending.
+    ``flatten_fn(batch, keep)`` is the envelope→columns pivot: the
+    multi-table demux's hook for each table's own columns and types."""
     if late_policy not in LATE_POLICIES:
         raise ValueError(
             f"late_policy must be one of {LATE_POLICIES}, got {late_policy!r}"
@@ -123,82 +102,116 @@ def _merge_batch(
         history_path, key_col=key, n_buckets=n_buckets,
         retain_snapshots=retain_snapshots,
     )
-    if store.exists() and store.manifest()["version"] >= batch_id:
-        return  # replayed, already committed — idempotent no-op
     changes = _changes(batch, ts_col, handle_deletes, flatten_fn)
-    tombstone_col = "__tomb" if handle_deletes else None
-    # persist: the batch lineage otherwise re-runs source-read + flatten
-    # four times (empty probe, touched-bucket collect, the merge's
-    # auto-broadcast key count, and the commit materialization) — on a
-    # 200 ms-trigger hot path that quadruples per-batch input cost
-    changes = _pinned = changes.persist()
+    tomb = "__tomb" if handle_deletes else None
+    if _merge_changes(
+        spark, store, changes, batch_id, ts_col, tomb, late_policy
+    ) and compact_every:
+        # post-commit maintenance in the same single-writer thread:
+        # folds accumulated per-batch closed partitions once enough pile up
+        store.compact_closed(spark, min_batches=compact_every)
+
+
+def _merge_changes(
+    spark: SparkSession,
+    store: Scd2Store,
+    changes: DataFrame,
+    batch_id: int,
+    ts_col: str,
+    tombstone_col: str | None = None,
+    late_policy: str = "compat",
+) -> bool:
+    """Merge one micro-batch of flat change rows (ordered within the
+    batch by ``cdc_sequence_id``) into ``store``; True iff it committed.
+
+    Closed SCD2 rows are immutable, so the merge runs against the
+    current-rows snapshot only (``scd2_apply`` never modifies
+    ``is_current='N'`` rows) — and only against the key-hash BUCKETS
+    the batch touches: the store scans exactly those bucket
+    directories (a bucket with no rows yet reads as nothing), and the
+    commit rewrites exactly those buckets while untouched buckets carry
+    forward by manifest reference.
+
+    The changes, and under "quarantine" the late split, are persisted
+    and probed by one aggregate each (touched buckets and row count —
+    the empty-batch probe and the one broadcast decision; late and
+    on-time counts); the writes read them instead of re-running the
+    source read + flatten or the late-split join. Per-batch cost is
+    fixed-overhead dominated (~2.4 s at 32 threads whatever the batch
+    size), so each job a probe adds counts.
+
+    Exactly-once: the store records the committed batch id; a replayed
+    micro-batch (crash between store commit and checkpoint commit) is
+    detected by ``version >= batch_id`` and skipped — the store and the
+    checkpoint form a pair (wiping one requires wiping the other).
+    A missing store is detected EXPLICITLY via the manifest; a corrupt
+    or unreadable store raises and fails the batch instead of being
+    silently rebuilt from one micro-batch.
+    """
+    exists = store.exists()
+    # manifest() also loads the store's bucket count for bucket_expr
+    if exists and store.manifest()["version"] >= batch_id:
+        return False  # replayed, already committed — idempotent no-op
+    key, order = store.key_col, ("cdc_sequence_id",)
+    changes = changes.persist()
+    pinned = [changes]
     try:
-        touched: list[int] = []
-        if store.exists():
-            # tiny by construction (≤ n_buckets values): the collect is
-            # what turns the current-rows read into a pruned listing —
-            # and it doubles as the empty-batch probe (an empty batch
-            # touches zero buckets), saving one job per micro-batch on
-            # the hot path (measured: per-batch cost is fixed-overhead
-            # dominated, ~2.4 s at 32 threads regardless of batch size)
-            touched = [
-                r.b
-                for r in changes.select(store.bucket_expr().alias("b"))
-                .distinct()
-                .collect()
-            ]
-            if not touched:
-                return
-        elif not changes.head(1):
-            return
-        if touched and store.has_buckets(touched):
+        touched, rows = changes.agg(
+            F.collect_set(store.bucket_expr()), F.count(F.lit(1))
+        ).first()
+        if not rows:
+            return False
+        # touched holds ≤ n_buckets ints, so the collect is tiny; rows
+        # bounds the batch's key count: under the bound, the late probe
+        # and the merge broadcast their per-key summaries
+        small_batch = rows <= MAX_BROADCAST_KEYS
+        if not exists:
+            merged = scd2_build(
+                changes, key, ts_col, order_cols=order,
+                tombstone_col=tombstone_col, skew_protection=False,
+            )
+        else:
             current = store.read_current(spark, buckets=touched)
             if late_policy == "quarantine":
-                # A change whose event time precedes its key's current
-                # valid_from would invert the interval chain; route it
-                # to the side-channel and merge only the appendable
-                # remainder. A key with no current row (all-new or
-                # tombstoned) is always appendable. A replay of a batch
-                # whose store commit succeeded never reaches this split
-                # (the version >= batch_id guard above returns first),
+                # Late changes (scd2_split_late) would invert the
+                # interval chain: they go to the side-channel and only
+                # the appendable rest merges; a key with no current row
+                # (all-new or tombstoned) is never late. A replay of a
+                # batch whose store commit succeeded never reaches this
+                # split (the version >= batch_id guard returns first),
                 # so quarantine dirs are written at most once per
-                # committed batch — it cannot be re-classified against
-                # post-merge current rows. Only a batch whose store
-                # commit itself failed replays here, against the same
-                # pre-merge state, overwriting batch=<id> idempotently.
-                changes, late = scd2_split_late(current, changes, key, ts_col)
-                if late.head(1):
+                # committed batch, never re-classified against
+                # post-merge current rows; only a batch whose commit
+                # failed replays here, against the same pre-merge
+                # state, overwriting batch=<id> idempotently.
+                split = _probe_late(current, changes, [key], ts_col, small_batch)
+                pinned.append(split.persist())
+                late = F.col("__late")
+                n_late, n_on_time = split.agg(
+                    F.count_if(late), F.count_if(~late)
+                ).first()
+                if n_late:
                     write_batch(
-                        late, history_path.rstrip("/") + "_quarantine", batch_id
+                        split.filter(late).drop("__late"),
+                        store.path + "_quarantine", batch_id,
                     )
-                if not changes.head(1):
-                    return  # everything was late; nothing to merge
+                if not n_on_time:
+                    return False  # everything was late; nothing to merge
+                changes = split.filter(~late).drop("__late")
             # skew_protection off: a micro-batch is bounded by the
             # trigger (maxFilesPerTrigger), so per-key skew within one
             # batch is batch-sized, and an extra eager detection job
             # per batch would tax the 200 ms-class latency budget
-            # broadcast_changes=True skips the auto-sizing count job:
-            # a micro-batch is bounded by the trigger, so its per-key
-            # summary always fits a broadcast — one fewer job per batch
             merged = scd2_apply(
-                current, changes, key, ts_col, order_cols=("cdc_sequence_id",),
+                current, changes, key, ts_col, order_cols=order,
                 tombstone_col=tombstone_col, skew_protection=False,
-                broadcast_changes=True,
+                broadcast_changes=small_batch,
             )
-        else:
-            # first batch, or every touched bucket is virgin (all-new
-            # keys): there are no current rows to merge against
-            merged = scd2_build(
-                changes, key, ts_col, order_cols=("cdc_sequence_id",),
-                tombstone_col=tombstone_col, skew_protection=False,
-            )
-        store.commit(merged, batch_id, touched or None)
+        store.commit(merged, batch_id, touched)
+        return True
     finally:
-        _pinned.unpersist()
-    if compact_every:
-        # post-commit maintenance in the same single-writer thread:
-        # folds accumulated per-batch closed partitions once enough pile up
-        store.compact_closed(spark, min_batches=compact_every)
+        for df in pinned:
+            df.unpersist()
 
 
 def splice_quarantine(

@@ -70,6 +70,10 @@ def _wait_for_quiet(
     5-minute average said the host was busy the whole time, and the
     round burned a cross-round comparison on it.
 
+    r11 (VERDICT r10 #4): the one pre-run gate calls this with
+    ``budget_s=0``, so it waits on the 5-minute average only — three
+    straight rounds recorded `busy_5m: true` on every official pass.
+
     r12 (VERDICT r11 #3, fourth contended official artifact in a row):
     the 5-minute average is now WAITED ON too, from its own shared
     budget (`budget_5m_s` > 0 enables it). The r11 pre-run gate proved
@@ -106,36 +110,6 @@ def _wait_for_quiet(
                 "proceeded_over_threshold": load_max > 0 and la1 > load_max,
             }
         time.sleep(5.0 if not ok_1m else 10.0)
-
-
-def _wait_for_quiet_5m(load_max: float, budget_s: float) -> dict:
-    """r11 (VERDICT r10 #4): BEFORE the first pass, wait (bounded) for
-    the 5-MINUTE average too — three straight rounds recorded
-    `busy_5m: true` on every official pass, making every absolute
-    number an upper bound and burning adjudication effort on
-    cross-round comparisons. The 1-minute per-pass gate stays as-is
-    (a 5-minute average decays too slowly to re-wait per pass); this
-    one runs once, where it can actually help. Budget default 600 s
-    (env SPARK_GRAFT_LOAD_WAIT_5M_S); on exhaustion the run proceeds
-    and the artifact says so (`proceeded_over_threshold`)."""
-    t0 = time.monotonic()
-    while True:
-        try:
-            la1, la5, _ = os.getloadavg()
-        except OSError:
-            return {"loadavg_1m_at_start": None,
-                    "loadavg_5m_at_start": None, "busy_5m": None,
-                    "waited_s": 0.0, "proceeded_over_threshold": False}
-        waited = time.monotonic() - t0
-        if load_max <= 0 or la5 <= load_max or waited >= budget_s:
-            return {
-                "loadavg_1m_at_start": round(la1, 2),
-                "loadavg_5m_at_start": round(la5, 2),
-                "busy_5m": load_max > 0 and la5 > load_max,
-                "waited_s": round(waited, 1),
-                "proceeded_over_threshold": load_max > 0 and la5 > load_max,
-            }
-        time.sleep(10.0)
 
 
 HEADLINE = [
@@ -228,9 +202,11 @@ def main() -> None:
     # below are Spark jobs whose load would otherwise ride the slowly-
     # decaying 5m average and make the gate wait out (or blame the
     # host for) the bench's own work.
-    gate_5m = _wait_for_quiet_5m(
-        load_max, float(os.environ.get("SPARK_GRAFT_LOAD_WAIT_5M_S", "600"))
+    gate_5m = _wait_for_quiet(
+        load_max, 0.0, float(os.environ.get("SPARK_GRAFT_LOAD_WAIT_5M_S", "600"))
     )
+    # it waited on the 5-minute average only, so that is what it proceeded over
+    gate_5m["proceeded_over_threshold"] = bool(gate_5m["busy_5m"])
     spark = get_spark("bench")
     spark.sparkContext.setLogLevel("ERROR")
 

@@ -198,6 +198,9 @@ def test_store_random_batches_with_maintenance(spark, tmp_path_factory, events, 
     from architrave_project_apache_nifi_spark.streaming.history_store import (
         Scd2Store,
     )
+    from architrave_project_apache_nifi_spark.streaming.scd2_stream import (
+        _merge_changes,
+    )
 
     path = str(tmp_path_factory.mktemp("store"))
     events = sorted(events, key=lambda e: e[1])
@@ -211,18 +214,13 @@ def test_store_random_batches_with_maintenance(spark, tmp_path_factory, events, 
 
     store = Scd2Store(path, key_col="ProductID", n_buckets=4, retain_snapshots=2)
     for batch_id, part in enumerate(parts):
+        # the stream's own merge (probe, pruned read, apply or build,
+        # commit), which orders a batch by cdc_sequence_id
         changes = spark.createDataFrame(part, schema)
-        touched = [
-            r.b for r in changes.select(store.bucket_expr().alias("b")).distinct().collect()
-        ]
-        if store.exists() and store.has_buckets(touched):
-            merged = scd2_apply(
-                store.read_current(spark, buckets=touched),
-                changes, "ProductID", "change_ts", ("seq",),
-            )
-        else:
-            merged = scd2_build(changes, "ProductID", "change_ts", ("seq",))
-        store.commit(merged, batch_id, touched_buckets=touched or None)
+        _merge_changes(
+            spark, store, changes.withColumnRenamed("seq", "cdc_sequence_id"),
+            batch_id, "change_ts",
+        )
         op = ops[batch_id % len(ops)]
         if op == "compact":
             store.compact_closed(spark, min_batches=1)
@@ -234,7 +232,8 @@ def test_store_random_batches_with_maintenance(spark, tmp_path_factory, events, 
     rebuilt = scd2_build(
         spark.createDataFrame(rows, schema), "ProductID", "change_ts", ("seq",)
     )
-    assert _norm(store.read_all(spark)) == _norm(rebuilt)
+    got = store.read_all(spark).withColumnRenamed("cdc_sequence_id", "seq")
+    assert _norm(got) == _norm(rebuilt)
     for s in store.snapshots():
         store.read_snapshot(spark, s).count()  # every retained seq readable
 

@@ -749,3 +749,56 @@ def test_store_commits_of_few_or_no_rows(spark, tmp_path):
     for df in (empty.read_all(spark), empty.read_current(spark)):
         assert df.columns == ["ProductID", "v", "is_current"]
         assert df.count() == 0
+
+
+def test_merge_batch_job_budget(spark, tmp_path):
+    """A quarantine micro-batch against an existing store asks Spark one
+    touched-bucket question and one late-split question, then writes:
+    the whole second batch (probes, quarantine write, merge and commit)
+    stays inside a fixed job budget. Inputs are in-memory frames, so
+    the count covers the merge only, not a source's listing jobs."""
+    import json
+    import uuid
+
+    from architrave_project_apache_nifi_spark.sources.cdc import _envelope
+    from architrave_project_apache_nifi_spark.streaming.commitdirs import (
+        read_committed,
+    )
+    from architrave_project_apache_nifi_spark.streaming.scd2_stream import (
+        _merge_batch,
+    )
+
+    hist = str(tmp_path / "hist")
+
+    def merge(events, batch_id):
+        raw = spark.createDataFrame([(json.dumps(e),) for e in events], "value STRING")
+        _merge_batch(
+            spark, cdc.parse_envelope(raw), hist, "ProductID", "change_ts",
+            batch_id, n_buckets=4, late_policy="quarantine",
+        )
+
+    merge([_envelope(1, "insert", 9012), _envelope(3, "insert", 9014),
+           _envelope(5, "update", 9014, price=120.0)], 0)
+    sc = spark.sparkContext
+    group = f"merge-budget-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, "second micro-batch")
+    try:
+        # seq 4 precedes 9014's current valid_from (seq 5): late
+        merge([_envelope(4, "update", 9014, price=999.0),
+               _envelope(9, "update", 9014, price=140.0),
+               _envelope(10, "update", 9012, price=1.0)], 1)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    # 16 under the test session's conf: 3 for the touched aggregate,
+    # 7 for the late aggregate (each AQE exchange is a job), 6 for the
+    # two writes (quarantine, then the merge + commit)
+    jobs = len(sc.statusTracker().getJobIdsForGroup(group))
+    assert jobs <= 16, jobs
+
+    late = read_committed(spark, hist + "_quarantine").collect()
+    assert [r.Price for r in late] == [999.0]
+    cur = read_history(spark, hist).filter(F.col("is_current") == "Y")
+    assert sorted((r.ProductID, r.Price) for r in cur.collect()) == [
+        (9012, 1.0), (9014, 140.0)
+    ]
