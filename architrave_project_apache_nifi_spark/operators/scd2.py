@@ -348,38 +348,6 @@ def scd2_apply(
     return updated_history.unionByName(new_versions)
 
 
-def _probe_late(
-    history: DataFrame,
-    changes: DataFrame,
-    keys: list[str],
-    ts_col: str,
-    small_batch: bool,
-) -> DataFrame:
-    """``changes`` plus the boolean ``__late`` of :func:`scd2_split_late`.
-    ``small_batch`` decides BOTH broadcasts: the latest-``valid_from``
-    summary has one row per touched key, so a batch over the broadcast
-    bound must shuffle-join both sides or the second one OOMs the driver."""
-    touched = changes.select(*keys).distinct()
-    if small_batch:
-        touched = F.broadcast(touched)
-    latest = (
-        history.join(touched, on=keys, how="left_semi")
-        .groupBy(*keys)
-        .agg(F.max("valid_from").alias("__latest_from"))
-    )
-    if small_batch:
-        latest = F.broadcast(latest)
-    # NULL ts must not vanish (NULL <= x is NULL, failing BOTH filters):
-    # coalesce to on-time, matching scd2_apply's arrival-order trust.
-    is_late = F.coalesce(
-        F.col("__latest_from").isNotNull()
-        & (F.col(ts_col) <= F.col("__latest_from")),
-        F.lit(False),
-    )
-    probed = changes.join(latest, on=keys, how="left")
-    return probed.withColumn("__late", is_late).drop("__latest_from")
-
-
 def scd2_split_late(
     history: DataFrame,
     changes: DataFrame,
@@ -409,15 +377,36 @@ def scd2_split_late(
     history ONLY for the batch's touched keys (broadcast semi-join
     first, aggregate after), so the shuffle is bounded by the touched
     subset, never the full history; the summary itself (one row per
-    touched key) broadcasts back against the batch.
+    touched key) broadcasts back against the batch. The aggregate is
+    for full history (many versions per key, closed-only deleted keys);
+    a current snapshot's one row per key already holds the latest
+    ``valid_from``, so the stream lookup-joins it (``_merge_changes``).
     """
     keys = _as_list(key_cols)
-    small_batch = _fits_broadcast(
-        changes, changes.select(*keys).distinct(), max_broadcast_keys
+    touched = changes.select(*keys).distinct()
+    # One gate decides BOTH broadcasts: `latest` is one row per
+    # touched key (same cardinality), so a >max_broadcast_keys batch must
+    # shuffle-join on both sides or the second broadcast OOMs the driver.
+    small_batch = _fits_broadcast(changes, touched, max_broadcast_keys)
+    if small_batch:
+        touched = F.broadcast(touched)
+    latest = (
+        history.join(touched, on=keys, how="left_semi")
+        .groupBy(*keys)
+        .agg(F.max("valid_from").alias("__latest_from"))
     )
-    probed = _probe_late(history, changes, keys, ts_col, small_batch)
-    late = F.col("__late")
-    return probed.filter(~late).drop("__late"), probed.filter(late).drop("__late")
+    if small_batch:
+        latest = F.broadcast(latest)
+    probed = changes.join(latest, on=keys, how="left")
+    # NULL ts must not vanish (NULL <= x is NULL, failing BOTH filters):
+    # coalesce to on-time, matching scd2_apply's arrival-order trust.
+    late = F.coalesce(
+        F.col("__latest_from").isNotNull()
+        & (F.col(ts_col) <= F.col("__latest_from")),
+        F.lit(False),
+    )
+    on_time = probed.filter(~late).drop("__latest_from")
+    return on_time, probed.filter(late).drop("__latest_from")
 
 
 def scd2_apply_late(

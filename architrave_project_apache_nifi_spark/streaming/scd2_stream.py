@@ -37,7 +37,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 
-from ..operators.scd2 import MAX_BROADCAST_KEYS, _probe_late, scd2_apply, scd2_build
+from ..operators.scd2 import MAX_BROADCAST_KEYS, scd2_apply, scd2_build
 from ..sources import cdc
 from .commitdirs import read_committed, start_foreach_batch, write_batch
 from .history_store import Scd2Store
@@ -134,11 +134,13 @@ def _merge_changes(
 
     The changes, and under "quarantine" the late split, are persisted
     and probed by one aggregate each (touched buckets and row count —
-    the empty-batch probe and the one broadcast decision; late and
+    the empty-batch probe and the merge's broadcast decision; late and
     on-time counts); the writes read them instead of re-running the
-    source read + flatten or the late-split join. Per-batch cost is
-    fixed-overhead dominated (~2.4 s at 32 threads whatever the batch
-    size), so each job a probe adds counts.
+    source read + flatten or the late-split join. That join is a lookup
+    of each change's key in the snapshot the merge reads, which has one
+    row per key: its ``valid_from`` is the key's latest. Per-batch cost
+    is fixed-overhead dominated (~2.4 s at 32 threads whatever the
+    batch size), so each job a probe adds counts.
 
     Exactly-once: the store records the committed batch id; a replayed
     micro-batch (crash between store commit and checkpoint commit) is
@@ -162,8 +164,8 @@ def _merge_changes(
         if not rows:
             return False
         # touched holds ≤ n_buckets ints, so the collect is tiny; rows
-        # bounds the batch's key count: under the bound, the late probe
-        # and the merge broadcast their per-key summaries
+        # bounds the batch's key count: under the bound, the merge
+        # broadcasts its per-key summary
         small_batch = rows <= MAX_BROADCAST_KEYS
         if not exists:
             merged = scd2_build(
@@ -173,18 +175,26 @@ def _merge_changes(
         else:
             current = store.read_current(spark, buckets=touched)
             if late_policy == "quarantine":
-                # Late changes (scd2_split_late) would invert the
-                # interval chain: they go to the side-channel and only
-                # the appendable rest merges; a key with no current row
-                # (all-new or tombstoned) is never late. A replay of a
-                # batch whose store commit succeeded never reaches this
-                # split (the version >= batch_id guard returns first),
+                # Late changes (scd2_split_late's rule; a NULL ts is on
+                # time) would invert the interval chain: they go to the
+                # side-channel and only the appendable rest merges; a key
+                # with no current row (all-new or tombstoned) is never
+                # late. No hint on the join: the planner sizes the
+                # snapshot from the touched buckets' files, and AQE
+                # re-plans at runtime. A replay of a batch whose store
+                # commit succeeded never reaches this split (the
+                # version >= batch_id guard returns first),
                 # so quarantine dirs are written at most once per
                 # committed batch, never re-classified against
                 # post-merge current rows; only a batch whose commit
                 # failed replays here, against the same pre-merge
                 # state, overwriting batch=<id> idempotently.
-                split = _probe_late(current, changes, [key], ts_col, small_batch)
+                split = changes.join(
+                    current.select(key, "valid_from"), on=key, how="left"
+                ).withColumn("__late", F.coalesce(
+                    F.col("valid_from").isNotNull()
+                    & (F.col(ts_col) <= F.col("valid_from")), F.lit(False),
+                )).drop("valid_from")
                 pinned.append(split.persist())
                 late = F.col("__late")
                 n_late, n_on_time = split.agg(

@@ -19,6 +19,7 @@ sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 from architrave_project_apache_nifi_spark.queries import REGISTRY  # noqa: E402
 from architrave_project_apache_nifi_spark.session import get_spark  # noqa: E402
+from perfbench.workloads import HEADLINE  # noqa: E402
 
 
 def _load_telemetry() -> dict:
@@ -110,47 +111,6 @@ def _wait_for_quiet(
                 "proceeded_over_threshold": load_max > 0 and la1 > load_max,
             }
         time.sleep(5.0 if not ok_1m else 10.0)
-
-
-HEADLINE = [
-    "scd2_build",
-    "scd2_merge_incremental",
-    "scd2_current_rows",
-    "lookup_join",
-    "agg_percentiles_by_type",
-    "window_latest_event_per_user",
-    "q1_pricing_summary",
-    "q3_shipping_priority",
-    "q5_local_supplier_volume",
-    "q6_revenue_change",
-    "asof_join_last_click",
-    "range_join_clicks_before_purchase",
-    "sessionize_events",
-    "text_quality",
-    "doc_fingerprint",
-    "dedup_minhash_lsh",
-    "dedup_ngram_jaccard",
-    "neardup_cosine",
-    "ann_topk_bruteforce",
-    "ann_topk_ivf",
-    # r11 (VERDICT r10 #5): the PQ serving pair joins the headline —
-    # codebooks are memoized in the pre-pass like the IVF index, so the
-    # timings measure encode+search, not training
-    "ann_topk_pq",
-    "ann_topk_ivfpq",
-    # r12: the perceptual image near-dup family joins the headline
-    # (decode -> dHash -> band join -> Hamming verify at sf0.1's 5k
-    # images); records its own first-run baseline
-    "multimodal_image_neardup",
-    # r12 session 2: the CCNet perplexity stage joins the headline —
-    # reference-slice trigram LM train (3 checkpointed vocab aggs) +
-    # corpus scoring + per-lang bucketing, timed end-to-end (train is
-    # part of the stage's real cost); records its own first-run
-    # baseline
-    "text_ppl_ccnet",
-    "window_running_spend",
-    "rollup_events",
-]
 
 
 def _stream_throughput(spark) -> dict:

@@ -790,11 +790,11 @@ def test_merge_batch_job_budget(spark, tmp_path):
     finally:
         sc.setLocalProperty("spark.jobGroup.id", None)
         sc.setLocalProperty("spark.job.description", None)
-    # 16 under the test session's conf: 3 for the touched aggregate,
-    # 7 for the late aggregate (each AQE exchange is a job), 6 for the
-    # two writes (quarantine, then the merge + commit)
+    # 13 under the test session's conf: 3 for the touched aggregate,
+    # 4 for the late aggregate (each AQE exchange is a job), 1 for the
+    # quarantine write, 5 for the merge + commit
     jobs = len(sc.statusTracker().getJobIdsForGroup(group))
-    assert jobs <= 16, jobs
+    assert jobs <= 13, jobs
 
     late = read_committed(spark, hist + "_quarantine").collect()
     assert [r.Price for r in late] == [999.0]
