@@ -3,6 +3,19 @@
 The reference flows JSON over JDBC endpoints; our engine's batch inputs
 are columnar parquet (scans get predicate pushdown + column pruning for
 free — see plans/inspect.py assertions).
+
+Each table's schema is resolved once, as the reference's JDBC writers
+resolve theirs once into a schema cache. Without a schema,
+``spark.read.parquet`` runs a one-task footer job on every call to infer
+it; ``load`` instead reads with ``spark.read.schema(s)``, where ``s`` is
+the table's ``StructType`` from ``_SCHEMAS``. That cache holds schemas
+only: one ``(signature, StructType)`` entry per absolute table path,
+where the signature is the sorted ``(name, size, mtime_ns)`` of the
+files Spark lists there, so a rewritten table is re-inferred and its
+entry replaced. It never holds data, a ``DataFrame`` or a result: every
+``load`` builds a fresh relation and every query scans the files again.
+(A shared relation would also give two loads of one table the same
+attribute ids, making the registry's self-joins ambiguous.)
 """
 
 from __future__ import annotations
@@ -11,6 +24,7 @@ import os
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 TABLES = (
     "region",
@@ -37,13 +51,52 @@ DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 _NANO_TS_COLS: dict[str, tuple[str, ...]] = {"events": ("ts",)}
 
 
+#: absolute table path -> (file signature, schema inferred from those files)
+_SCHEMAS: dict[str, tuple[tuple, StructType]] = {}
+
+
+def _signature(path: str) -> tuple:
+    """Sorted ``(name, size, mtime_ns)`` of the data files at ``path``: the
+    file itself, or the files under the directory whose names (and parent
+    directories' names) do not start with ``_`` or ``.``, as Spark lists
+    them. Empty when nothing is there to list."""
+    if os.path.isfile(path):
+        st = os.stat(path)
+        return ((os.path.basename(path), st.st_size, st.st_mtime_ns),)
+    sig = []
+    for root, dirs, files in os.walk(path):
+        dirs[:] = [d for d in dirs if not d.startswith(("_", "."))]
+        for f in files:
+            if not f.startswith(("_", ".")):
+                st = os.stat(os.path.join(root, f))
+                sig.append((os.path.relpath(os.path.join(root, f), path), st.st_size, st.st_mtime_ns))
+    return tuple(sorted(sig))
+
+
+def _schema(spark: SparkSession, path: str) -> StructType:
+    """The table's schema, inferred once per file signature. Entries are
+    replaced whole, so concurrent first loads at worst infer twice. With
+    no local files to sign (a missing path, a non-local URI) nothing is
+    cached and Spark infers, or raises, as ``spark.read.parquet`` does."""
+    key = os.path.abspath(path)
+    sig = _signature(key)
+    hit = _SCHEMAS.get(key)
+    if hit is not None and hit[0] == sig:
+        return hit[1]
+    schema = spark.read.parquet(path).schema
+    if sig:
+        _SCHEMAS[key] = (sig, schema)
+    return schema
+
+
 def load(spark: SparkSession, name: str, sf_dir: str = DEFAULT_SF_DIR) -> DataFrame:
     if name not in TABLES:
         raise KeyError(f"unknown table {name!r}; one of {TABLES}")
     nano_cols = _NANO_TS_COLS.get(name, ())
     if nano_cols:
         spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    df = spark.read.parquet(os.path.join(sf_dir, f"{name}.parquet"))
+    path = os.path.join(sf_dir, f"{name}.parquet")
+    df = spark.read.schema(_schema(spark, path)).parquet(path)
     dtypes = dict(df.dtypes)
     for c in nano_cols:
         if dtypes.get(c) == "bigint":
@@ -92,8 +145,6 @@ def local_df(spark: SparkSession, rows, schema) -> DataFrame:
     strings, float64 arrays). ``schema`` is a DDL string or
     StructType; ``rows`` an iterable of tuples/Rows."""
     import pandas as pd
-
-    from pyspark.sql.types import StructType
 
     names = (
         schema.names

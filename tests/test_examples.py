@@ -72,6 +72,8 @@ def example_runs(tmp_path_factory) -> dict[str, dict]:
             [sys.executable, os.path.abspath(__file__), str(out)]
             + [script for script, _ in EXAMPLES],
             cwd=REPO,
+            # the test JVM's heap (conftest.py), not the engine's 48g default
+            env={**os.environ, "SPARK_GRAFT_DRIVER_MEM": "4g"},
             capture_output=True,
             text=True,
             timeout=1200,
